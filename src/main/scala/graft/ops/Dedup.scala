@@ -693,16 +693,11 @@ object Dedup {
     // (guide §2.6: overlap independent writes — both read the frozen
     // `keep` checkpoint and touch disjoint relations); postings waits
     // for BOTH, preserving the crash contract.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val guards = Seq(
-      Future(writeShRel(keep.groupBy(col("sh")).agg(count(lit(1)).as("df")),
-        path, "dfs", nb, mode)),
-      Future(keep.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-        .write.mode(mode).parquet(s"$path/sizes")))
-      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    guards.foreach(_.get) // all settled; surface the first failure
+    ConcurrentJobs.settleAll(spark)(
+      () => writeShRel(keep.groupBy(col("sh")).agg(count(lit(1)).as("df")),
+        path, "dfs", nb, mode),
+      () => keep.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
+        .write.mode(mode).parquet(s"$path/sizes"))
     writeShRel(keep, path, "postings", nb, mode)
     keep.unpersist()
     ()

@@ -811,16 +811,8 @@ object CorpusQueries {
     * reclaim them at JVM exit (the [[ExtQueries]] index-cache pattern).
     */
   private def rmTreeAtExit(m: java.util.concurrent.ConcurrentHashMap[String, String]): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles match {
-          case null => ()
-          case kids => kids.foreach(rm)
-        }
-        f.delete(); ()
-      }
-      m.values().forEach(p => rm(new java.io.File(p)))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      m.values().forEach(p => MicroBatchLoop.rmTree(new java.io.File(p)))))
 
   /** Robust outlier detection ([[Outliers.robustOutliers]]): events
     * whose value sits > 3 MAD-σ from its event-type median — the

@@ -241,16 +241,8 @@ object ExtQueries {
     * its fragmented scaffold eagerly; this covers the kept copies).
     */
   private def rmTreeAtExit(m: java.util.concurrent.ConcurrentHashMap[String, String]): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles match {
-          case null => ()
-          case kids => kids.foreach(rm)
-        }
-        f.delete(); ()
-      }
-      m.values().forEach(p => rm(new java.io.File(p)))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      m.values().forEach(p => MicroBatchLoop.rmTree(new java.io.File(p)))))
   rmTreeAtExit(annIndexes)
   /** vec_id 0's embedding as a driver-side array — the query vector
     * every at-rest probe (q116/q120/q122/q123/q124) takes.
@@ -1053,11 +1045,7 @@ object ExtQueries {
       val p = s"${sys.props("java.io.tmpdir")}/graft_ann_compact_$tag"
       graft.ops.AnnIndex.compact(s, frag, p)
       // the fragmented copy is scaffolding — reclaim it
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(frag))
+      MicroBatchLoop.rmTree(new java.io.File(frag))
       p
     })
     graft.ops.AnnIndex.probe(s, path, "vec_id", queryVec0(s, dir), k = 5,

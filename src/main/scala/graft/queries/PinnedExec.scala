@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Input-derived shuffle-partition pin for EAGER operator bodies —
   * guide §2.2 ("size shuffle partitions to the data") applied to the
-  * judged batch operators the same way [[StreamingQueries.batchParts]]
+  * judged batch operators the same way [[MicroBatchLoop.derivedParts]]
   * applies it to the micro-batch loops.
   *
   * Motivation (measured, round 19): the recall-contract operators
@@ -23,17 +23,16 @@ import org.apache.spark.sql.SparkSession
   *
   * The count is a FORMULA of the operator's input bytes, not a
   * constant: max(inputBytes / maxPartitionBytes, cores/4) clamped to
-  * [1, cores] — identical to the loops' [[StreamingQueries.batchParts]]
-  * rationale (bytes term dominates at scale: a 100 TB corpus divides
-  * out to far past the core count, so the pin is the SAME count the
-  * session would want; the cores/4 floor keeps test-scale CPU work —
-  * hashing, codegen joins — parallel). `SPARK_GRAFT_OP_PARTS`
-  * overrides per deployment.
+  * [1, cores] — the loops' own formula, [[MicroBatchLoop.derivedParts]]
+  * (bytes term dominates at scale: a 100 TB corpus divides out to far
+  * past the core count, so the pin is the SAME count the session would
+  * want; the cores/4 floor keeps test-scale CPU work — hashing, codegen
+  * joins — parallel).
   *
   * Session-conf note: the pin mutates the shared session's conf for
   * the duration of the body and restores it in a finally — the same
-  * plan-shape-only hazard [[StreamingQueries.batchLoopConf]] documents
-  * for concurrent suites (results are partition-count-independent;
+  * plan-shape-only hazard [[MicroBatchLoop.withConf]] documents for
+  * concurrent suites (results are partition-count-independent;
   * the oracle pins that).
   */
 object PinnedExec {
@@ -49,28 +48,12 @@ object PinnedExec {
       if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
     }.sum
 
-  /** The derived partition count — [[StreamingQueries.batchParts]]'s
-    * formula (kept in sync; see its scaladoc for the A/B behind the
-    * floor and cap).
-    */
-  def derivedParts(spark: SparkSession, bytes: Long): String =
-    sys.env.getOrElse("SPARK_GRAFT_OP_PARTS", {
-      val split = math.max(1L,
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")))
-      val cores = spark.sparkContext.defaultParallelism.toLong
-      val byBytes = (bytes + split - 1) / split
-      math.max(1L, math.min(cores, math.max(byBytes, cores / 4))).toString
-    })
-
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to the
-    * input-derived count; restore the previous value afterwards.
+    * input-derived count ([[MicroBatchLoop.derivedParts]]); restore the
+    * previous value afterwards.
     */
   def withDerivedParts[A](spark: SparkSession, inputPaths: String*)(
-      body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      derivedParts(spark, inputBytes(spark, inputPaths: _*)))
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+      body: => A): A =
+    MicroBatchLoop.withConf(spark, "spark.sql.shuffle.partitions" ->
+      MicroBatchLoop.derivedParts(spark, inputBytes(spark, inputPaths: _*)))(body)
 }

@@ -613,11 +613,7 @@ object RefQueries {
     val (staged, inTarget) = graft.warehouse.Merge.verifyCounts(merged, stage, "event_id")
     require(staged == inTarget,
       s"verified truncate refused: staged=$staged merged=$inTarget")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(stagePath))
+    MicroBatchLoop.rmTree(new java.io.File(stagePath))
     require(!new java.io.File(stagePath).exists, "stage truncate failed")
     merged.orderBy("event_id")
   }

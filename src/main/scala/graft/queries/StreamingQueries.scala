@@ -2,6 +2,7 @@ package graft.queries
 
 import java.util.concurrent.atomic.AtomicLong
 
+import graft.queries.MicroBatchLoop.{labeled, rmTree}
 import graft.streaming.StreamingAnalytics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -70,141 +71,6 @@ object StreamingQueries {
   // view, and concurrent suites share one session
   private val runSeq = new AtomicLong()
 
-  /** Label one phase's jobs in the UI/listeners (optimization guide
-    * §1.5). Thread-local, so concurrently-submitted phases (the par3
-    * store folds) stay correctly attributed.
-    */
-  private def labeled[A](s: org.apache.spark.sql.SparkSession,
-      label: String)(f: => A): A = {
-    // restore the PREVIOUS description, not null: inside foreachBatch
-    // the streaming engine owns the thread's description, and nested
-    // labeled scopes must not erase their outer label (r18 ADVICE)
-    val prev = s.sparkContext.getLocalProperty("spark.job.description")
-    s.sparkContext.setJobDescription(label)
-    try f finally s.sparkContext.setJobDescription(prev)
-  }
-
-  /** Pin the execution shape of a micro-batch loop and return the
-    * restore handle (call it in the loop's `finally`):
-    *
-    *  - batch-sized shuffle partitions (`parts`) — every per-batch job
-    *    is over one micro-batch, and session-sized partition counts
-    *    made the replay task-launch-bound (the [[runToCompletion]]
-    *    state-partition lesson);
-    *  - adaptive query execution OFF for the batch bodies. AQE
-    *    re-plans after every exchange, which turns each per-batch
-    *    action into a chain of stage-jobs (measured on q203: 302 jobs
-    *    → 134, 13.6 s → 11.1 s at sf0.1 with everything else fixed).
-    *    Its two payoffs are partition coalescing and skew splitting —
-    *    both already decided here by the pinned batch-sized partition
-    *    count, exactly why Spark itself runs streaming plans with AQE
-    *    off. Per-batch re-planning is pure scheduling latency PER
-    *    MICRO-BATCH at any scale; a deployment whose batches are
-    *    skewed re-enables it per loop (one conf, restored in finally).
-    */
-  private def batchLoopConf(s: org.apache.spark.sql.SparkSession,
-      parts: String): () => Unit = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    val discKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val prevDisc = s.conf.get(discKey)
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    // deployment override knob (scale-parameterised, like
-    // SPARK_GRAFT_BATCH_PARTS): loops whose batches are large or skewed
-    // re-enable AQE without a code change
-    s.conf.set("spark.sql.adaptive.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_BATCH_AQE", "false"))
-    // a store probe lists its partition dirs per read; the loops' store
-    // dir counts are LAYOUT-bounded (≤ bands·sigBuckets = 64 here), yet
-    // past the default threshold (32) each listing becomes a cluster
-    // JOB — measured ~0.2 s of pure scheduling per probe on a local FS
-    // where the driver lists 64 dirs in microseconds. Deployments on
-    // object stores with thousands of dirs re-lower this per loop.
-    s.conf.set(discKey, "8192")
-    () => {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      s.conf.set(discKey, prevDisc)
-    }
-  }
-
-  /** Batch-sized shuffle-partition count for a micro-batch loop — a
-    * FORMULA, not a constant (the r18 rounds pinned "8", an sf0.1-tuned
-    * magic number): max of
-    *
-    *  - the BYTES term, staged-batch bytes / scan split size
-    *    (`spark.sql.files.maxPartitionBytes` — shuffle partitions track
-    *    scan partitions), which dominates at scale (a 100 TB
-    *    deployment's quarter-corpus batch divides out far past the
-    *    floor), and
-    *  - a PARALLELISM floor of defaultParallelism/4 — per-batch shuffle
-    *    stages do CPU work (shingle/md5 hashing, codegen joins) that a
-    *    bytes-only count would serialize at test scale; A/B-measured at
-    *    sf0.1/32 cores: floor 8 beats bytes-derived 1 on q117/q140/q204
-    *    (e.g. q204 7.0 s vs 9.1 s) while 16+ re-enters task-launch
-    *    swamping (the r18 lesson), so a quarter of the cores is the
-    *    measured knee,
-    *
-    * clamped to [1, defaultParallelism]. `SPARK_GRAFT_BATCH_PARTS`
-    * overrides per deployment (skewed batches, wider clusters).
-    */
-  private def batchParts(s: org.apache.spark.sql.SparkSession,
-      batchBytes: Long): String =
-    sys.env.getOrElse("SPARK_GRAFT_BATCH_PARTS", {
-      val split = math.max(1L,
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          s.conf.get("spark.sql.files.maxPartitionBytes", "128m")))
-      val cores = s.sparkContext.defaultParallelism.toLong
-      val byBytes = (batchBytes + split - 1) / split
-      math.max(1L, math.min(cores, math.max(byBytes, cores / 4))).toString
-    })
-
-  /** Stage `df` as `n` mtime-ordered single-file parquet batches
-    * (`batch0..batch{n-1}.parquet` under `in`) in ONE pass over the
-    * input (guide §1.2/§2.4: the previous per-batch filter+coalesce
-    * loop scanned and wrote the source n times — n jobs where one
-    * suffices): `key` (an integral column in [0, n)) picks each row's
-    * batch, `repartition(n, key)` lands every batch wholly inside one
-    * task, and `partitionBy` writes all n files in one job. The moved
-    * files' mtimes encode replay order for the file source. Returns
-    * the largest staged file's bytes — [[batchParts]]'s input.
-    */
-  private def stageMtimeBatches(df: DataFrame, key: Column, n: Int,
-      in: java.io.File, base: Long): Long = {
-    val tmp = new java.io.File(in.getParentFile,
-      s"stage_${runSeq.incrementAndGet()}")
-    df.withColumn("__b", key.cast("int"))
-      .repartition(n, col("__b"))
-      .write.partitionBy("__b").parquet(tmp.toString)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    var maxBytes = 1L
-    for (k <- 0 until n) {
-      val dst = new java.io.File(in, s"batch$k.parquet")
-      val dirK = new java.io.File(tmp, s"__b=$k")
-      Option(dirK.listFiles)
-          .flatMap(_.find(_.getName.endsWith(".parquet"))) match {
-        case Some(part) =>
-          java.nio.file.Files.move(part.toPath, dst.toPath); ()
-        case None =>
-          // an all-rows-elsewhere key writes no partition dir — stage an
-          // empty single-file batch so the replay still sees n batches
-          val e = new java.io.File(tmp, s"empty$k")
-          df.limit(0).coalesce(1).write.parquet(e.toString)
-          java.nio.file.Files.move(
-            e.listFiles.find(_.getName.endsWith(".parquet")).get.toPath,
-            dst.toPath)
-          ()
-      }
-      dst.setLastModified(base + k * 2000L)
-      maxBytes = math.max(maxBytes, dst.length)
-    }
-    rm(tmp)
-    maxBytes
-  }
-
   /** Drive a streaming frame to completion: process every available file
     * (`AvailableNow`), await termination, return the memory sink as a
     * static frame. At 100 TB the same code is a continuous query writing
@@ -214,56 +80,44 @@ object StreamingQueries {
   private def runToCompletion(df: DataFrame, mode: OutputMode): DataFrame = {
     val spark = df.sparkSession
     val name = s"graft_sq_${runSeq.incrementAndGet()}"
-    // State-store partition count is a STATE-SIZING knob, pinned at
-    // query start into the checkpoint: every partition pays a state
-    // file commit (+ fsync) per operator per micro-batch, so 32
-    // partitions of near-empty state made replay commit-bound (q74 was
-    // 4.6 s at sf0.1 — ~3x the next streaming query — almost entirely
-    // HDFSStateStore commits). 2 partitions bounds per-partition state
-    // at ~state/2 — right for a bounded replay (a stream-stream join
-    // pays 4 store commits per partition per batch, so partitions are
-    // the multiplier); a continuous 100 TB/day deployment sizes this to
-    // expected live state instead (the partition count, not the
-    // operator shape, is the deployment knob).
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    // The replay watermark (10 years > any event-time span) means the
-    // trailing no-data micro-batch can never emit or evict anything —
-    // it exists to finalize watermark-gated state, and nothing is
-    // watermark-gated here (append shapes emit immediately, aggregate
-    // shapes run Complete). Skip it: one fewer full commit cycle
-    // (offset log + state commit per store per partition) per query.
-    val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // A bounded replay-verification checkpoint is ephemeral by
     // construction (AvailableNow → memory sink, deleted on completion):
     // park it on tmpfs when the host has one, so the per-batch state
     // commits don't pay disk fsyncs. A durable deployment points this
     // at reliable storage — durability is a sink/checkpoint choice, not
-    // part of the operator semantics under test.
-    val ckRoot =
-      if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_$name"
-      else s"${System.getProperty("java.io.tmpdir")}/graft_ck_$name"
-    def rmCk(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmCk)
-      f.delete(); ()
-    }
-    // A stale checkpoint from a failed/interrupted earlier run of the
-    // same query name would make this run RESUME from committed offsets
-    // against a fresh (empty) memory sink — silently partial results.
-    // The name is per-process unique (runSeq) but not cross-process, so
-    // clear the path before start, and clean up in finally so a failed
-    // run can't poison the next one either.
-    rmCk(new java.io.File(ckRoot))
+    // part of the operator semantics under test. The dir is fresh, so a
+    // failed earlier run can never make this one RESUME from committed
+    // offsets against an empty memory sink (silently partial results).
+    val root = MicroBatchLoop.scratchDir(name)
     try {
-      val q =
-        try df.writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckRoot)
+      // Both pins are read at query start, so they are held around
+      // `start()` only.
+      //
+      // State-store partition count is a STATE-SIZING knob, pinned at
+      // query start into the checkpoint: every partition pays a state
+      // file commit (+ fsync) per operator per micro-batch, so 32
+      // partitions of near-empty state made replay commit-bound (q74 was
+      // 4.6 s at sf0.1 — ~3x the next streaming query — almost entirely
+      // HDFSStateStore commits). 2 partitions bounds per-partition state
+      // at ~state/2 — right for a bounded replay (a stream-stream join
+      // pays 4 store commits per partition per batch, so partitions are
+      // the multiplier); a continuous 100 TB/day deployment sizes this to
+      // expected live state instead (the partition count, not the
+      // operator shape, is the deployment knob).
+      //
+      // The replay watermark (10 years > any event-time span) means the
+      // trailing no-data micro-batch can never emit or evict anything —
+      // it exists to finalize watermark-gated state, and nothing is
+      // watermark-gated here (append shapes emit immediately, aggregate
+      // shapes run Complete). Skip it: one fewer full commit cycle
+      // (offset log + state commit per store per partition) per query.
+      val q = MicroBatchLoop.withConf(spark,
+          "spark.sql.shuffle.partitions" -> "2",
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+        df.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", new java.io.File(root, "checkpoint").toString)
           .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-        }
+      }
       q.awaitTermination()
       // Detach the result from the memory sink's session-global temp view
       // before dropping it (localCheckpoint materializes the rows), so a
@@ -275,7 +129,7 @@ object StreamingQueries {
     } finally {
       // ephemeral by contract (see above) — remove eagerly, even on
       // failure, not at exit
-      rmCk(new java.io.File(ckRoot))
+      rmTree(root)
     }
   }
 
@@ -393,11 +247,7 @@ object StreamingQueries {
     }
     require(archived >= 3 && archived + remaining == 4,
       s"archive-and-delete failed: archived=$archived remaining=$remaining")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(root)
+    rmTree(root)
     out.orderBy("event_type")
   }
 
@@ -418,40 +268,9 @@ object StreamingQueries {
     * [[graft.ops.Dedup.foldIn]]'s scaladoc documents); the state here is
     * per-session, exactly like q113's.
     */
-  /** Ephemeral per-run scratch (staged batch files, the q118 index):
-    * tmpfs when the host has one — the contents are written and read
-    * back within one query invocation and deleted in its finally, so
-    * disk persistence buys nothing and the partitioned-index fan-out
-    * (hundreds of small files per append) is metadata-op-bound. A
-    * durable deployment writes the index to real storage — layout, not
-    * location, is the operator contract.
-    */
-  private def scratchDir(tag: String): java.io.File = {
-    val base =
-      if (new java.io.File("/dev/shm").isDirectory) new java.io.File("/dev/shm")
-      else new java.io.File(System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files
-      .createTempDirectory(base.toPath, s"graft_${tag}_${runSeq.incrementAndGet()}_")
-      .toFile
-  }
-
   private val q117: Q = (s, dir) => {
     import graft.ops.Dedup
-    val root = scratchDir("q117")
-    val in = new java.io.File(root, "in"); in.mkdirs()
     val docs = s.read.parquet(s"$dir/documents.parquet")
-    val base = System.currentTimeMillis() - 3600L * 1000
-    // the file source replays oldest-first: mtime IS the batch order
-    val batchBytes = labeled(s, "q117: stage batches") {
-      stageMtimeBatches(docs, col("doc_id") % 4, 4, in, base)
-    }
-    // Batch-sized work wants batch-sized shuffles: every per-batch job
-    // below (shingle checkpoint, pair join, fold-in compaction) is over
-    // a QUARTER of the corpus — session-sized near-empty partitions per
-    // job made the replay task-launch-bound, same lesson as the
-    // state-partition knob in [[runToCompletion]]. AQE off per
-    // [[batchLoopConf]]'s q203 measurement. Restored in the finally.
-    val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
     // driver-side loop state, advanced once per micro-batch (foreachBatch
     // bodies run sequentially on the driver): the maintained index and
     // the accumulated keep decisions (4 batch-sized checkpointed frames).
@@ -462,42 +281,22 @@ object StreamingQueries {
       shEmpty.groupBy(col("doc_id")).agg(count(lit(1)).as("n")),
       shEmpty.groupBy(col("sh")).agg(count(lit(1)).as("df")))
     var results = List.empty[DataFrame]
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(in.toString)
-    val ckRoot =
-      if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_q117_${runSeq.get()}"
-      else s"${System.getProperty("java.io.tmpdir")}/graft_ck_q117_${runSeq.get()}"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
+    // the file source replays oldest-first: mtime IS the batch order
+    MicroBatchLoop.run(s, "q117", docs, col("doc_id") % 4, 4) { _ =>
+      (batch, _) => {
+        val sh = Dedup.shingleTable(batch, "doc_id", "text", 3).localCheckpoint()
+        val pairs = Dedup.dedupAgainstIndex(sh, ix, "doc_id",
+          threshold = 0.5, maxShingleDf = 1000)
+        val dupIds = pairs.select(col("new_id").as("doc_id")).distinct()
+        val decided = batch.select(col("doc_id"))
+          .join(dupIds.withColumn("__dup", lit(true)), Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("__dup"), lit(false)).unary_!.as("kept"))
+          .localCheckpoint()
+        ix = Dedup.foldIn(ix, sh, decided.filter(col("kept")), "doc_id")
+        results = decided :: results
+      }
     }
-    rm(new java.io.File(ckRoot))
-    try {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckRoot)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val sh = Dedup.shingleTable(batch, "doc_id", "text", 3).localCheckpoint()
-          val pairs = Dedup.dedupAgainstIndex(sh, ix, "doc_id",
-            threshold = 0.5, maxShingleDf = 1000)
-          val dupIds = pairs.select(col("new_id").as("doc_id")).distinct()
-          val decided = batch.select(col("doc_id"))
-            .join(dupIds.withColumn("__dup", lit(true)), Seq("doc_id"), "left")
-            .select(col("doc_id"), coalesce(col("__dup"), lit(false)).unary_!.as("kept"))
-            .localCheckpoint()
-          ix = Dedup.foldIn(ix, sh, decided.filter(col("kept")), "doc_id")
-          results = decided :: results
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      results.reduce(_ unionByName _).orderBy("doc_id")
-    } finally {
-      restoreConf()
-      rm(new java.io.File(ckRoot))
-      rm(root)
-    }
+    results.reduce(_ unionByName _).orderBy("doc_id")
   }
 
   /** Streaming ANN-index ingest — q117's embedding-side mirror: the
@@ -529,63 +328,14 @@ object StreamingQueries {
     * at 100 TB the same fixed overhead amortizes over large bucket
     * files.
     */
-  private val streamAnnIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles match {
-        case null => ()
-        case kids => kids.foreach(rm)
-      }
-      f.delete(); ()
-    }
-    streamAnnIndexes.values().forEach(p => rm(new java.io.File(p)))
-  }))
   private def streamAnnIndexPath(s: SparkSession, dir: String): String =
-    streamAnnIndexes.computeIfAbsent(dir, _ => {
-      import graft.ops.AnnIndex
-      val root = scratchDir("q118stage")
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      // the index itself outlives the staging (shutdown-hook-reclaimed);
-      // same tmpfs-preferred base as the per-run scratch
-      val ixBase =
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-        else System.getProperty("java.io.tmpdir")
-      val indexPath = s"$ixBase/graft_stream_ann_" +
-        s"${ProcessHandle.current().pid()}_${math.abs(dir.hashCode)}"
+    MicroBatchLoop.builtOnce("q118", dir) { indexPath =>
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val base = System.currentTimeMillis() - 3600L * 1000
-      val batchBytes = stageMtimeBatches(emb, col("vec_id") % 4, 4, in, base)
-      val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
-      val stream = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(in.toString)
-      val ckRoot =
-        if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_q118_${runSeq.get()}"
-        else s"${System.getProperty("java.io.tmpdir")}/graft_ck_q118_${runSeq.get()}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
+      MicroBatchLoop.run(s, "q118", emb, col("vec_id") % 4, 4) { _ =>
+        (batch, _) => graft.ops.AnnIndex.append(batch, "vec_id", "embedding",
+          indexPath, numPlanes = 8, dim = ExtQueries.embDim)
       }
-      rm(new java.io.File(ckRoot))
-      try {
-        val q = stream.writeStream
-          .option("checkpointLocation", ckRoot)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            AnnIndex.append(batch, "vec_id", "embedding", indexPath,
-              numPlanes = 8, dim = ExtQueries.embDim)
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally {
-        restoreConf()
-        rm(new java.io.File(ckRoot))
-        rm(root)
-      }
-      indexPath
-    })
+    }
 
   private def streamAnnProbe(s: SparkSession, dir: String,
       path: String): DataFrame = {
@@ -630,61 +380,14 @@ object StreamingQueries {
     * completes the retrieval crawl loop at rest. Index built once per
     * (pid, dir) — benched iterations measure the pruned serve.
     */
-  private val streamBm25Indexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles match {
-        case null => ()
-        case kids => kids.foreach(rm)
-      }
-      f.delete(); ()
-    }
-    streamBm25Indexes.values().forEach(p => rm(new java.io.File(p)))
-  }))
   private def streamBm25IndexPath(s: SparkSession, dir: String): String =
-    streamBm25Indexes.computeIfAbsent(dir, _ => {
-      import graft.ops.Retrieval
-      val root = scratchDir("q159stage")
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val ixBase =
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-        else System.getProperty("java.io.tmpdir")
-      val indexPath = s"$ixBase/graft_stream_bm25_" +
-        s"${ProcessHandle.current().pid()}_${math.abs(dir.hashCode)}"
+    MicroBatchLoop.builtOnce("q159", dir) { indexPath =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val base = System.currentTimeMillis() - 3600L * 1000
-      val batchBytes = stageMtimeBatches(docs, col("doc_id") % 4, 4, in, base)
-      val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(in.toString)
-      val ckRoot =
-        if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_q159_${runSeq.get()}"
-        else s"${System.getProperty("java.io.tmpdir")}/graft_ck_q159_${runSeq.get()}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
+      MicroBatchLoop.run(s, "q159", docs, col("doc_id") % 4, 4) { _ =>
+        (batch, _) => graft.ops.Retrieval.appendToBm25Index(batch, "doc_id",
+          "text", indexPath, termBucketsIfNew = 16)
       }
-      rm(new java.io.File(ckRoot))
-      try {
-        val q = stream.writeStream
-          .option("checkpointLocation", ckRoot)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            Retrieval.appendToBm25Index(batch, "doc_id", "text",
-              indexPath, termBucketsIfNew = 16)
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally {
-        restoreConf()
-        rm(new java.io.File(ckRoot))
-        rm(root)
-      }
-      indexPath
-    })
+    }
 
   private val q159: Q = (s, dir) =>
     graft.ops.Retrieval.bm25FromIndex(s, streamBm25IndexPath(s, dir),
@@ -707,25 +410,6 @@ object StreamingQueries {
     * Store built once per (pid, dir) — benched iterations measure the
     * pruned probe.
     */
-  private val streamImageSigStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val streamAudioSigStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val streamVideoSigStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles match {
-        case null => ()
-        case kids => kids.foreach(rm)
-      }
-      f.delete(); ()
-    }
-    streamImageSigStores.values().forEach(p => rm(new java.io.File(p)))
-    streamAudioSigStores.values().forEach(p => rm(new java.io.File(p)))
-    streamVideoSigStores.values().forEach(p => rm(new java.io.File(p)))
-  }))
-
   /** The shared streaming signature-store crawl loop (q175 image /
     * q189 audio — [[graft.ops.Dedup.writeSignatureStore]] is
     * signature-agnostic, and so is its streaming ingest): even
@@ -735,59 +419,25 @@ object StreamingQueries {
     * against the frozen `_layout` for the rest.
     */
   private def streamSigStorePath(s: SparkSession, dir: String, tag: String,
-      cache: java.util.concurrent.ConcurrentHashMap[String, String],
       sigsOf: DataFrame => DataFrame, sigCol: String,
       idCol: String = "media_id"): String =
-    cache.computeIfAbsent(dir, _ => {
+    MicroBatchLoop.builtOnce(tag, dir) { storePath =>
       import graft.ops.Dedup
-      val root = scratchDir(s"${tag}stage")
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val storeBase =
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-        else System.getProperty("java.io.tmpdir")
-      val storePath = s"$storeBase/graft_stream_${tag}_" +
-        s"${ProcessHandle.current().pid()}_${math.abs(dir.hashCode)}"
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val base = System.currentTimeMillis() - 3600L * 1000
       // batch k holds doc_id ≡ 2k (mod 8) — the even docs, 4 ways
-      val batchBytes = stageMtimeBatches(
-        docs.filter(col("doc_id") % 2 === 0),
-        (col("doc_id") % 8) / 2, 4, in, base)
-      val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(in.toString)
-      val ckRoot =
-        if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_${tag}_${runSeq.get()}"
-        else s"${System.getProperty("java.io.tmpdir")}/graft_ck_${tag}_${runSeq.get()}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
+      MicroBatchLoop.run(s, tag, docs.filter(col("doc_id") % 2 === 0),
+          (col("doc_id") % 8) / 2, 4) { _ =>
+        (batch, _) => {
+          val sigs = sigsOf(batch)
+          if (!new java.io.File(storePath, "_layout").isDirectory)
+            Dedup.writeSignatureStore(sigs, idCol, sigCol,
+              storePath, bits = 48, bands = 4, sigBuckets = 16)
+          else
+            Dedup.appendToSignatureStore(sigs, idCol, sigCol,
+              storePath)
+        }
       }
-      rm(new java.io.File(ckRoot))
-      try {
-        val q = stream.writeStream
-          .option("checkpointLocation", ckRoot)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val sigs = sigsOf(batch)
-            if (!new java.io.File(storePath, "_layout").isDirectory)
-              Dedup.writeSignatureStore(sigs, idCol, sigCol,
-                storePath, bits = 48, bands = 4, sigBuckets = 16)
-            else
-              Dedup.appendToSignatureStore(sigs, idCol, sigCol,
-                storePath)
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally {
-        restoreConf()
-        rm(new java.io.File(ckRoot))
-        rm(root)
-      }
-      storePath
-    })
+    }
 
   private val q175: Q = (s, dir) =>
     graft.ops.Dedup.dedupAgainstSignatureStore(
@@ -795,7 +445,7 @@ object StreamingQueries {
           s.read.parquet(s"$dir/documents.parquet")
             .filter(col("doc_id") % 2 === 1)),
         "media_id", "ahash",
-        streamSigStorePath(s, dir, "q175", streamImageSigStores,
+        streamSigStorePath(s, dir, "q175",
           ExtQueries.imageFixtureSigs, "ahash"),
         maxHamming = 3)
       .orderBy("new_id", "corpus_id")
@@ -815,7 +465,7 @@ object StreamingQueries {
           s.read.parquet(s"$dir/documents.parquet")
             .filter(col("doc_id") % 2 === 1)),
         "media_id", "afp",
-        streamSigStorePath(s, dir, "q189", streamAudioSigStores,
+        streamSigStorePath(s, dir, "q189",
           ExtQueries.audioFixtureSigs, "afp"),
         maxHamming = 3)
       .orderBy("new_id", "corpus_id")
@@ -838,7 +488,7 @@ object StreamingQueries {
               s.read.parquet(s"$dir/documents.parquet")
                 .filter(col("doc_id") % 2 === 1)),
             "fid", "fhash",
-            streamSigStorePath(s, dir, "q205", streamVideoSigStores,
+            streamSigStorePath(s, dir, "q205",
               ExtQueries.videoFixtureFidSigs, "fhash", idCol = "fid"),
             maxHamming = 3)
           .select(col("new_id"), col("corpus_id")),
@@ -857,64 +507,16 @@ object StreamingQueries {
     * cannot change a posterior, because counts are additive. Store
     * built once per (pid, dir); benched iterations measure scoring.
     */
-  private val streamNbStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles match {
-        case null => ()
-        case kids => kids.foreach(rm)
-      }
-      f.delete(); ()
-    }
-    streamNbStores.values().forEach(p => rm(new java.io.File(p)))
-  }))
   private def streamNbPath(s: SparkSession, dir: String): String =
-    streamNbStores.computeIfAbsent(dir, _ => {
-      import graft.ops.NaiveBayes
-      val root = scratchDir("q184stage")
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val storeBase =
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-        else System.getProperty("java.io.tmpdir")
-      val storePath = s"$storeBase/graft_stream_nb_" +
-        s"${ProcessHandle.current().pid()}_${math.abs(dir.hashCode)}"
+    MicroBatchLoop.builtOnce("q184", dir) { storePath =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val base = System.currentTimeMillis() - 3600L * 1000
       // batches 0..2 = the training slices doc_id ≡ 0,1,2 (mod 4)
-      val batchBytes = stageMtimeBatches(
-        docs.filter(col("doc_id") % 4 =!= 3),
-        col("doc_id") % 4, 3, in, base)
-      val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(in.toString)
-      val ckRoot =
-        if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_q184_${runSeq.get()}"
-        else s"${System.getProperty("java.io.tmpdir")}/graft_ck_q184_${runSeq.get()}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
+      MicroBatchLoop.run(s, "q184", docs.filter(col("doc_id") % 4 =!= 3),
+          col("doc_id") % 4, 3) { _ =>
+        (batch, bid) => graft.ops.NaiveBayes.writeCountBatch(batch,
+          "doc_id", "text", "lang", storePath, s"mb$bid")
       }
-      rm(new java.io.File(ckRoot))
-      try {
-        val q = stream.writeStream
-          .option("checkpointLocation", ckRoot)
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            NaiveBayes.writeCountBatch(batch, "doc_id", "text", "lang",
-              storePath, s"mb$bid")
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally {
-        restoreConf()
-        rm(new java.io.File(ckRoot))
-        rm(root)
-      }
-      storePath
-    })
+    }
 
   private val q184: Q = (s, dir) =>
     graft.ops.NaiveBayes.classify(
@@ -935,64 +537,16 @@ object StreamingQueries {
     * q191's retrain-from-scratch SQL VERBATIM — the stream-built count
     * store and the unlearn route must land on the same model.
     */
-  private val streamLmStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles match {
-        case null => ()
-        case kids => kids.foreach(rm)
-      }
-      f.delete(); ()
-    }
-    streamLmStores.values().forEach(p => rm(new java.io.File(p)))
-  }))
   private def streamLmPath(s: SparkSession, dir: String): String =
-    streamLmStores.computeIfAbsent(dir, _ => {
-      import graft.ops.LanguageModel
-      val root = scratchDir("q195stage")
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val storeBase =
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-        else System.getProperty("java.io.tmpdir")
-      val storePath = s"$storeBase/graft_stream_lm_" +
-        s"${ProcessHandle.current().pid()}_${math.abs(dir.hashCode)}"
+    MicroBatchLoop.builtOnce("q195", dir) { storePath =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val base = System.currentTimeMillis() - 3600L * 1000
       // batches 0..2 = the training slices doc_id ≡ 0,1,2 (mod 4)
-      val batchBytes = stageMtimeBatches(
-        docs.filter(col("doc_id") % 4 =!= 3),
-        col("doc_id") % 4, 3, in, base)
-      val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(in.toString)
-      val ckRoot =
-        if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_q195_${runSeq.get()}"
-        else s"${System.getProperty("java.io.tmpdir")}/graft_ck_q195_${runSeq.get()}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
+      MicroBatchLoop.run(s, "q195", docs.filter(col("doc_id") % 4 =!= 3),
+          col("doc_id") % 4, 3) { _ =>
+        (batch, bid) => graft.ops.LanguageModel.writeCountBatch(batch,
+          "doc_id", "text", storePath, s"mb$bid")
       }
-      rm(new java.io.File(ckRoot))
-      try {
-        val q = stream.writeStream
-          .option("checkpointLocation", ckRoot)
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            LanguageModel.writeCountBatch(batch, "doc_id", "text",
-              storePath, s"mb$bid")
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally {
-        restoreConf()
-        rm(new java.io.File(ckRoot))
-        rm(root)
-      }
-      storePath
-    })
+    }
 
   private val q195: Q = (s, dir) =>
     graft.ops.LanguageModel.scoreFromCounts(s, streamLmPath(s, dir),
@@ -1016,52 +570,24 @@ object StreamingQueries {
     */
   private val q138: Q = (s, dir) => {
     import graft.ops.LanguageModel
-    val root = scratchDir("q138")
-    val in = new java.io.File(root, "in"); in.mkdirs()
     val docs = s.read.parquet(s"$dir/documents.parquet")
-    val modelPath = new java.io.File(root, "model").toString
-    val base = System.currentTimeMillis() - 3600L * 1000
-    // batches 0..2 = the scored slices doc_id ≡ 1,2,3 (mod 4)
-    val batchBytes = labeled(s, "q138: stage batches") {
-      stageMtimeBatches(docs.filter(col("doc_id") % 4 =!= 0),
-        col("doc_id") % 4 - 1, 3, in, base)
-    }
-    val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
-    // train + calibrate BEFORE the stream starts — the frozen model
-    LanguageModel.writeModel(docs.filter(col("doc_id") % 4 === 0),
-      "doc_id", "text", modelPath)
     var results = List.empty[DataFrame]
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(in.toString)
-    val ckRoot =
-      if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_q138_${runSeq.get()}"
-      else s"${System.getProperty("java.io.tmpdir")}/graft_ck_q138_${runSeq.get()}"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
+    // batches 0..2 = the scored slices doc_id ≡ 1,2,3 (mod 4)
+    MicroBatchLoop.run(s, "q138", docs.filter(col("doc_id") % 4 =!= 0),
+        col("doc_id") % 4 - 1, 3) { root =>
+      val modelPath = new java.io.File(root, "model").toString
+      // train + calibrate BEFORE the stream starts — the frozen model
+      LanguageModel.writeModel(docs.filter(col("doc_id") % 4 === 0),
+        "doc_id", "text", modelPath)
+      (batch, _) => {
+        // detach each scored frame from the staged source files
+        // before the finally removes them (q117's pattern)
+        results = LanguageModel
+          .scoreGated(s, modelPath, batch, "doc_id", "text")
+          .localCheckpoint() :: results
+      }
     }
-    rm(new java.io.File(ckRoot))
-    try {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckRoot)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // detach each scored frame from the staged source files
-          // before the finally removes them (q117's pattern)
-          results = LanguageModel
-            .scoreGated(s, modelPath, batch, "doc_id", "text")
-            .localCheckpoint() :: results
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      results.reduce(_ unionByName _).orderBy("doc_id")
-    } finally {
-      restoreConf()
-      rm(new java.io.File(ckRoot))
-      rm(root)
-    }
+    results.reduce(_ unionByName _).orderBy("doc_id")
   }
 
   /** The STORED-index dedup loop — q117 with the maintained
@@ -1081,75 +607,47 @@ object StreamingQueries {
   private def storedDedupLoop(s: SparkSession, dir: String, tag: String,
       shBuckets: Int): DataFrame = {
     import graft.ops.Dedup
-    val root = scratchDir(tag)
-    val in = new java.io.File(root, "in"); in.mkdirs()
-    val ixPath = new java.io.File(root, "index").toString
     val docs = s.read.parquet(s"$dir/documents.parquet")
-    val base = System.currentTimeMillis() - 3600L * 1000
-    val batchBytes = labeled(s, s"$tag: stage batches") {
-      stageMtimeBatches(docs, col("doc_id") % 4, 4, in, base)
-    }
-    val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
     var results = List.empty[DataFrame]
     var batchNo = 0
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(in.toString)
-    val ckRoot =
-      if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_${tag}_${runSeq.get()}"
-      else s"${System.getProperty("java.io.tmpdir")}/graft_ck_${tag}_${runSeq.get()}"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(ckRoot))
-    try {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckRoot)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val sh = labeled(s, s"$tag: shingle") {
-            Dedup.shingleTable(batch, "doc_id", "text", 3).localCheckpoint()
-          }
-          // bucketed layout → the PRUNED probe (partition IN-list over
-          // the batch's sb values); flat layout → the full-index read
-          val pairs =
-            if (shBuckets > 0)
-              Dedup.dedupAgainstStoredIndex(sh, "doc_id", ixPath,
-                threshold = 0.5, maxShingleDf = 1000)
-            else
-              Dedup.dedupAgainstIndex(sh,
-                Dedup.readStoredIndex(s, "doc_id", ixPath), "doc_id",
-                threshold = 0.5, maxShingleDf = 1000)
-          val decided = labeled(s, s"$tag: probe+decide") {
-            val dupIds = pairs.select(col("new_id").as("doc_id")).distinct()
-            batch.select(col("doc_id"))
-              .join(dupIds.withColumn("__dup", lit(true)), Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("__dup"), lit(false)).unary_!.as("kept"))
-              .localCheckpoint()
-          }
-          labeled(s, s"$tag: fold") {
-            Dedup.appendToStoredIndex(sh, decided.filter(col("kept")),
-              "doc_id", ixPath, shBucketsIfNew = shBuckets)
-          }
-          results = decided :: results
-          batchNo += 1
-          // mid-loop OPTIMIZE: batches 2 and 3 probe a compacted dfs —
-          // fold-to-one-row-per-shingle must be semantics-neutral
-          if (batchNo == 2) labeled(s, s"$tag: compact dfs") {
-            Dedup.compactStoredDfs(s, ixPath)
-          }
-          ()
+    MicroBatchLoop.run(s, tag, docs, col("doc_id") % 4, 4) { root =>
+      val ixPath = new java.io.File(root, "index").toString
+      (batch, _) => {
+        val sh = labeled(s, s"$tag: shingle") {
+          Dedup.shingleTable(batch, "doc_id", "text", 3).localCheckpoint()
         }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      results.reduce(_ unionByName _).orderBy("doc_id")
-    } finally {
-      restoreConf()
-      rm(new java.io.File(ckRoot))
-      rm(root)
+        // bucketed layout → the PRUNED probe (partition IN-list over
+        // the batch's sb values); flat layout → the full-index read
+        val pairs =
+          if (shBuckets > 0)
+            Dedup.dedupAgainstStoredIndex(sh, "doc_id", ixPath,
+              threshold = 0.5, maxShingleDf = 1000)
+          else
+            Dedup.dedupAgainstIndex(sh,
+              Dedup.readStoredIndex(s, "doc_id", ixPath), "doc_id",
+              threshold = 0.5, maxShingleDf = 1000)
+        val decided = labeled(s, s"$tag: probe+decide") {
+          val dupIds = pairs.select(col("new_id").as("doc_id")).distinct()
+          batch.select(col("doc_id"))
+            .join(dupIds.withColumn("__dup", lit(true)), Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              coalesce(col("__dup"), lit(false)).unary_!.as("kept"))
+            .localCheckpoint()
+        }
+        labeled(s, s"$tag: fold") {
+          Dedup.appendToStoredIndex(sh, decided.filter(col("kept")),
+            "doc_id", ixPath, shBucketsIfNew = shBuckets)
+        }
+        results = decided :: results
+        batchNo += 1
+        // mid-loop OPTIMIZE: batches 2 and 3 probe a compacted dfs —
+        // fold-to-one-row-per-shingle must be semantics-neutral
+        if (batchNo == 2) labeled(s, s"$tag: compact dfs") {
+          Dedup.compactStoredDfs(s, ixPath)
+        }
+      }
     }
+    results.reduce(_ unionByName _).orderBy("doc_id")
   }
 
   private val q140: Q = (s, dir) => storedDedupLoop(s, dir, "q140", 0)
@@ -1202,158 +700,123 @@ object StreamingQueries {
     * surviving cross-batch near-dup pair).
     */
   private val q203: Q = (s, dir) => {
-    import graft.ops.{Decontamination, Dedup, LanguageModel, Retrieval}
-    val root = scratchDir("q203")
-    val in = new java.io.File(root, "in"); in.mkdirs()
+    import graft.ops.{ConcurrentJobs, Decontamination, Dedup, LanguageModel, Retrieval}
     val docs = s.read.parquet(s"$dir/documents.parquet")
-    val base = System.currentTimeMillis() - 3600L * 1000
-    val batchBytes = labeled(s, "q203: stage batches") {
-      stageMtimeBatches(docs, col("doc_id") % 4, 4, in, base)
-    }
-    val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
-    val shPath = new java.io.File(root, "shingle").toString
-    val bmPath = new java.io.File(root, "bm25").toString
-    val lmPath = new java.io.File(root, "lm").toString
-    val benchPath = new java.io.File(root, "bench").toString
-    // the eval set is frozen at rest BEFORE any training data flows
-    labeled(s, "q203: bench index") {
-      Decontamination.writeBenchIndex(docs.filter(col("doc_id") % 20 === 7),
-        "doc_id", "text", benchPath, k = 5)
-    }
     // driver-side loop state: accumulated decisions + admitted hashes
     var results = List.empty[DataFrame]
     var seenHashes: Option[DataFrame] = None
     var batchNo = 0
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(in.toString)
-    val ckRoot =
-      if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_q203_${runSeq.get()}"
-      else s"${System.getProperty("java.io.tmpdir")}/graft_ck_q203_${runSeq.get()}"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(ckRoot))
-    try {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckRoot)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val nonBench = batch.filter(col("doc_id") % 20 =!= 7)
-          // ONE tokenize feeds signals, 5-gram probe AND 3-gram dedup
-          val sig = graft.ops.CurationSignals.build(nonBench, "doc_id", "text")
-          val contaminated = Decontamination.overlapFromIndexShingles(
-              sig.shingles(5).select(col("doc_id").as("corpus_id"), col("sh")),
-              benchPath, minOverlap = 3)
-            .select(col("corpus_id").as("doc_id")).distinct()
-          val gated = labeled(batch.sparkSession, "q203: gate") {
-            nonBench.select(col("doc_id"))
-              .join(ExtQueries.gateSignals(sig), "doc_id")
-              .filter(col("lang_pred") === "en" &&
-                col("quality") >= 0.3 && col("dup_token_frac") <= 0.6)
-              .join(contaminated, Seq("doc_id"), "left_anti")
-              .select(col("doc_id"))
-              .localCheckpoint()
-          }
-          // exact: within-batch min-id per hash, then vs admitted hashes
-          val wHash = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("text_hash")).orderBy(col("doc_id"))
-          val batchKeeper = gated
-            .join(sig.base.select(col("doc_id"), col("text_hash")), "doc_id")
-            .withColumn("rk", row_number().over(wHash))
-            .filter(col("rk") === 1)
-            .select(col("doc_id"), col("text_hash"))
-          val exactSurv = labeled(batch.sparkSession, "q203: exact") {
-            seenHashes.foldLeft(batchKeeper)(
-                (d, seen) => d.join(seen, Seq("text_hash"), "left_anti"))
-              .localCheckpoint()
-          }
-          // near: batch-vs-stored-index (empty index on batch 0)
-          val sh3 = labeled(batch.sparkSession, "q203: shingle3") {
-            sig.shingles(3)
-              .join(exactSurv.select(col("doc_id")), Seq("doc_id"), "left_semi")
-              .localCheckpoint()
-          }
-          // FLAT stored layout by choice: a quarter-corpus batch's
-          // shingle set saturates any test-scale bucket IN-list
-          // (bench_sf10_probes.json measures the regimes — bucketing
-          // pays for term-bounded probes, not shingle-rich batches;
-          // q204 proves the layout switch is semantics-free when a
-          // deployment's batch/bucket ratio crosses the threshold)
-          val admitted = labeled(batch.sparkSession, "q203: near") {
-            val dupIds = Dedup.dedupAgainstIndex(sh3,
-                Dedup.readStoredIndex(s, "doc_id", shPath), "doc_id",
-                threshold = 0.5, maxShingleDf = 1000)
-              .select(col("new_id").as("doc_id")).distinct()
-            exactSurv
-              .join(dupIds, Seq("doc_id"), "left_anti")
-              .localCheckpoint()
-          }
-          val admittedIds = admitted.select(col("doc_id"))
-          val admittedDocs = nonBench
-            .join(admittedIds, Seq("doc_id"), "left_semi")
-          // fold the survivors into every text store (pure appends).
-          // The three stores are disjoint — their appends are
-          // embarrassingly parallel (q206's par3 convention; guide
-          // §2.6: overlap independent jobs so each fold's stage tail
-          // back-fills the others' idle cores). The next micro-batch
-          // only starts after this body returns, so awaiting all three
-          // here preserves the probe-sees-prior-folds sequencing.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          val folds = Seq(
-            Future(labeled(batch.sparkSession, "q203: fold shingle") {
-              Dedup.appendToStoredIndex(sh3, admittedIds, "doc_id", shPath)
-            }),
-            Future(labeled(batch.sparkSession, "q203: fold bm25") {
-              Retrieval.appendToBm25Index(admittedDocs, "doc_id", "text",
-                bmPath, termBucketsIfNew = 16)
-            }),
-            Future(labeled(batch.sparkSession, "q203: fold lm") {
-              LanguageModel.writeCountBatch(admittedDocs, "doc_id", "text",
-                lmPath, s"b$batchNo")
-            }))
-          // the decision rows and the admitted-hash state depend only on
-          // `admitted` (already checkpointed) — compute them while the
-          // folds run; everything is awaited before the body returns
-          val decided = labeled(batch.sparkSession, "q203: decided") {
-            nonBench.select(col("doc_id"))
-              .join(gated.withColumn("__g", lit(true)), Seq("doc_id"), "left")
-              .join(admittedIds.withColumn("__k", lit(true)), Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("__g"), lit(false)).as("gated"),
-                coalesce(col("__k"), lit(false)).as("kept"))
-              .localCheckpoint()
-          }
-          results = decided :: results
-          // the admitted-hash state stays LAZY: it is a union of ≤ 4
-          // already-checkpointed single-column frames, re-read (not
-          // recomputed) by the next batch's anti-join — checkpointing
-          // the union itself was one pure scheduling round trip per
-          // batch (r19 job-count shave; guide §1.2)
-          seenHashes = Some(
-            seenHashes
-              .map(_.unionByName(admitted.select(col("text_hash"))))
-              .getOrElse(admitted.select(col("text_hash"))))
-          // settle EVERY fold before leaving the body (a failed fold
-          // must not leave siblings racing the finally's cleanup — r18
-          // ADVICE), then propagate the first failure
-          val settled = folds.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-          settled.foreach(_.get)
-          batchNo += 1
-          sig.base.unpersist(blocking = false)
-          ()
+    MicroBatchLoop.run(s, "q203", docs, col("doc_id") % 4, 4) { root =>
+      val shPath = new java.io.File(root, "shingle").toString
+      val bmPath = new java.io.File(root, "bm25").toString
+      val lmPath = new java.io.File(root, "lm").toString
+      val benchPath = new java.io.File(root, "bench").toString
+      // the eval set is frozen at rest BEFORE any training data flows
+      labeled(s, "q203: bench index") {
+        Decontamination.writeBenchIndex(docs.filter(col("doc_id") % 20 === 7),
+          "doc_id", "text", benchPath, k = 5)
+      }
+      (batch, _) => {
+        val nonBench = batch.filter(col("doc_id") % 20 =!= 7)
+        // ONE tokenize feeds signals, 5-gram probe AND 3-gram dedup
+        val sig = graft.ops.CurationSignals.build(nonBench, "doc_id", "text")
+        val contaminated = Decontamination.overlapFromIndexShingles(
+            sig.shingles(5).select(col("doc_id").as("corpus_id"), col("sh")),
+            benchPath, minOverlap = 3)
+          .select(col("corpus_id").as("doc_id")).distinct()
+        val gated = labeled(batch.sparkSession, "q203: gate") {
+          nonBench.select(col("doc_id"))
+            .join(ExtQueries.gateSignals(sig), "doc_id")
+            .filter(col("lang_pred") === "en" &&
+              col("quality") >= 0.3 && col("dup_token_frac") <= 0.6)
+            .join(contaminated, Seq("doc_id"), "left_anti")
+            .select(col("doc_id"))
+            .localCheckpoint()
         }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      results.reduce(_ unionByName _).orderBy("doc_id")
-    } finally {
-      restoreConf()
-      rm(new java.io.File(ckRoot))
-      rm(root)
+        // exact: within-batch min-id per hash, then vs admitted hashes
+        val wHash = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("text_hash")).orderBy(col("doc_id"))
+        val batchKeeper = gated
+          .join(sig.base.select(col("doc_id"), col("text_hash")), "doc_id")
+          .withColumn("rk", row_number().over(wHash))
+          .filter(col("rk") === 1)
+          .select(col("doc_id"), col("text_hash"))
+        val exactSurv = labeled(batch.sparkSession, "q203: exact") {
+          seenHashes.foldLeft(batchKeeper)(
+              (d, seen) => d.join(seen, Seq("text_hash"), "left_anti"))
+            .localCheckpoint()
+        }
+        // near: batch-vs-stored-index (empty index on batch 0)
+        val sh3 = labeled(batch.sparkSession, "q203: shingle3") {
+          sig.shingles(3)
+            .join(exactSurv.select(col("doc_id")), Seq("doc_id"), "left_semi")
+            .localCheckpoint()
+        }
+        // FLAT stored layout by choice: a quarter-corpus batch's
+        // shingle set saturates any test-scale bucket IN-list
+        // (bench_sf10_probes.json measures the regimes — bucketing
+        // pays for term-bounded probes, not shingle-rich batches;
+        // q204 proves the layout switch is semantics-free when a
+        // deployment's batch/bucket ratio crosses the threshold)
+        val admitted = labeled(batch.sparkSession, "q203: near") {
+          val dupIds = Dedup.dedupAgainstIndex(sh3,
+              Dedup.readStoredIndex(s, "doc_id", shPath), "doc_id",
+              threshold = 0.5, maxShingleDf = 1000)
+            .select(col("new_id").as("doc_id")).distinct()
+          exactSurv
+            .join(dupIds, Seq("doc_id"), "left_anti")
+            .localCheckpoint()
+        }
+        val admittedIds = admitted.select(col("doc_id"))
+        val admittedDocs = nonBench
+          .join(admittedIds, Seq("doc_id"), "left_semi")
+        // fold the survivors into every text store (pure appends).
+        // The three stores are disjoint — their appends are
+        // embarrassingly parallel (q206's convention; guide §2.6:
+        // overlap independent jobs so each fold's stage tail
+        // back-fills the others' idle cores). The next micro-batch
+        // only starts after this body returns, so settling all three
+        // here preserves the probe-sees-prior-folds sequencing. The
+        // decision rows depend only on `admitted` (already
+        // checkpointed) — computed alongside the folds.
+        ConcurrentJobs.settleAll(s)(
+          () => labeled(s, "q203: fold shingle") {
+            Dedup.appendToStoredIndex(sh3, admittedIds, "doc_id", shPath)
+          },
+          () => labeled(s, "q203: fold bm25") {
+            Retrieval.appendToBm25Index(admittedDocs, "doc_id", "text",
+              bmPath, termBucketsIfNew = 16)
+          },
+          () => labeled(s, "q203: fold lm") {
+            LanguageModel.writeCountBatch(admittedDocs, "doc_id", "text",
+              lmPath, s"b$batchNo")
+          },
+          () => {
+            val decided = labeled(s, "q203: decided") {
+              nonBench.select(col("doc_id"))
+                .join(gated.withColumn("__g", lit(true)), Seq("doc_id"), "left")
+                .join(admittedIds.withColumn("__k", lit(true)), Seq("doc_id"), "left")
+                .select(col("doc_id"),
+                  coalesce(col("__g"), lit(false)).as("gated"),
+                  coalesce(col("__k"), lit(false)).as("kept"))
+                .localCheckpoint()
+            }
+            results = decided :: results
+          })
+        // the admitted-hash state stays LAZY: it is a union of ≤ 4
+        // already-checkpointed single-column frames, re-read (not
+        // recomputed) by the next batch's anti-join — checkpointing
+        // the union itself was one pure scheduling round trip per
+        // batch (r19 job-count shave; guide §1.2)
+        seenHashes = Some(
+          seenHashes
+            .map(_.unionByName(admitted.select(col("text_hash"))))
+            .getOrElse(admitted.select(col("text_hash"))))
+        batchNo += 1
+        sig.base.unpersist(blocking = false)
+      }
     }
+    results.reduce(_ unionByName _).orderBy("doc_id")
   }
 
   /** q206: the UNIFIED streaming MEDIA crawl loop — q203's composition
@@ -1377,141 +840,103 @@ object StreamingQueries {
     * (q117's round pattern, three modalities per round).
     */
   private val q206: Q = (s, dir) => {
-    import graft.ops.{Dedup, Multimodal}
-    val root = scratchDir("q206")
-    val in = new java.io.File(root, "in"); in.mkdirs()
+    import graft.ops.{ConcurrentJobs, Dedup, Multimodal}
     val docs = s.read.parquet(s"$dir/documents.parquet")
-    val base = System.currentTimeMillis() - 3600L * 1000
-    val batchBytes = labeled(s, "q206: stage batches") {
-      stageMtimeBatches(docs, col("doc_id") % 4, 4, in, base)
-    }
-    val restoreConf = batchLoopConf(s, batchParts(s, batchBytes))
-    val imgPath = new java.io.File(root, "imgsig").toString
-    val audPath = new java.io.File(root, "audsig").toString
-    val vidPath = new java.io.File(root, "vidsig").toString
     var results = List.empty[DataFrame]
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(in.toString)
-    val ckRoot =
-      if (new java.io.File("/dev/shm").isDirectory) s"/dev/shm/graft_ck_q206_${runSeq.get()}"
-      else s"${System.getProperty("java.io.tmpdir")}/graft_ck_q206_${runSeq.get()}"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(ckRoot))
-    try {
-      // the three modalities' decodes, probes, and folds touch disjoint
-      // stores and relations — run each stage's three jobs concurrently
-      // (Spark schedules concurrent actions from one session; at 100 TB
-      // the per-index maintenance of independent indexes is
-      // embarrassingly parallel, and the loop should SAY so)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      def par3[A](a: => A, b: => A, c: => A): Seq[A] = {
-        // settle EVERY future before propagating a failure (a failed
-        // job must not leave siblings racing the finally's cleanup)
-        val settled = Seq(Future(a), Future(b), Future(c))
-          .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-        settled.map(_.get)
-      }
-      val q = stream.writeStream
-        .option("checkpointLocation", ckRoot)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // decode once per modality — signatures, never pixels, flow on
-          val Seq(imgSigs, audSigs, vidSigs) = par3(
-            labeled(s, "q206: decode img") {
-              ExtQueries.crawlImageSigs(batch).localCheckpoint()
-            },
-            labeled(s, "q206: decode aud") {
-              ExtQueries.crawlAudioSigs(batch).localCheckpoint()
-            },
-            labeled(s, "q206: decode vid") {
-              ExtQueries.crawlVideoFidSigs(batch).localCheckpoint()
-            })
-          def dupIds(sigs: DataFrame, idCol: String, sigCol: String,
-              path: String, video: Boolean): DataFrame =
-            if (!new java.io.File(path, "_layout").isDirectory)
-              batch.select(col("doc_id")).limit(0)
-            else {
-              val pairs = Dedup.dedupAgainstSignatureStore(sigs, idCol,
-                sigCol, path, maxHamming = 3)
-              val docPairs =
-                if (video) Multimodal.videoPairsFromFramePairs(
-                  pairs.select(col("new_id"), col("corpus_id")),
-                  "new_id", "corpus_id", minFrames = 2)
-                else pairs
-              // LAZY by design: the store probe's eager parts (the
-              // banded-batch checkpoint + sb collect inside
-              // dedupAgainstSignatureStore) already ran in this
-              // modality's par3 future; the join itself evaluates once,
-              // inside `admitted`'s single checkpoint job below, whose
-              // three modality branches are parallel stages of ONE job
-              // instead of three scheduling round trips (r19; §1.2)
-              docPairs.select(col("new_id").as("doc_id")).distinct()
-            }
-          // a doc is admitted only when novel in EVERY modality
-          val dropped = par3(
-              labeled(s, "q206: probe img") {
-                dupIds(imgSigs, "media_id", "ahash", imgPath, video = false)
-              },
-              labeled(s, "q206: probe aud") {
-                dupIds(audSigs, "media_id", "afp", audPath, video = false)
-              },
-              labeled(s, "q206: probe vid") {
-                dupIds(vidSigs, "fid", "fhash", vidPath, video = true)
-              })
-            .reduce(_ unionByName _).distinct()
-          val admitted = labeled(s, "q206: admit") {
-            batch.select(col("doc_id"))
-              .join(dropped, Seq("doc_id"), "left_anti")
-              .localCheckpoint()
+    // the three modalities' decodes, probes, and folds touch disjoint
+    // stores and relations — run each stage's three jobs concurrently
+    // (Spark schedules concurrent actions from one session; at 100 TB
+    // the per-index maintenance of independent indexes is
+    // embarrassingly parallel, and the loop should SAY so)
+    MicroBatchLoop.run(s, "q206", docs, col("doc_id") % 4, 4) { root =>
+      val imgPath = new java.io.File(root, "imgsig").toString
+      val audPath = new java.io.File(root, "audsig").toString
+      val vidPath = new java.io.File(root, "vidsig").toString
+      (batch, _) => {
+        // decode once per modality — signatures, never pixels, flow on
+        val Seq(imgSigs, audSigs, vidSigs) = ConcurrentJobs.settleAll(s)(
+          () => labeled(s, "q206: decode img") {
+            ExtQueries.crawlImageSigs(batch).localCheckpoint()
+          },
+          () => labeled(s, "q206: decode aud") {
+            ExtQueries.crawlAudioSigs(batch).localCheckpoint()
+          },
+          () => labeled(s, "q206: decode vid") {
+            ExtQueries.crawlVideoFidSigs(batch).localCheckpoint()
+          })
+        def dupIds(sigs: DataFrame, idCol: String, sigCol: String,
+            path: String, video: Boolean): DataFrame =
+          if (!new java.io.File(path, "_layout").isDirectory)
+            batch.select(col("doc_id")).limit(0)
+          else {
+            val pairs = Dedup.dedupAgainstSignatureStore(sigs, idCol,
+              sigCol, path, maxHamming = 3)
+            val docPairs =
+              if (video) Multimodal.videoPairsFromFramePairs(
+                pairs.select(col("new_id"), col("corpus_id")),
+                "new_id", "corpus_id", minFrames = 2)
+              else pairs
+            // LAZY by design: the store probe's eager parts (the
+            // banded-batch checkpoint + sb collect inside
+            // dedupAgainstSignatureStore) already ran in this
+            // modality's settleAll future; the join itself evaluates once,
+            // inside `admitted`'s single checkpoint job below, whose
+            // three modality branches are parallel stages of ONE job
+            // instead of three scheduling round trips (r19; §1.2)
+            docPairs.select(col("new_id").as("doc_id")).distinct()
           }
-          // fold ONLY admitted signatures into each store
-          def fold(sigs: DataFrame, idCol: String, sigCol: String,
-              path: String): Unit =
-            if (!new java.io.File(path, "_layout").isDirectory)
-              Dedup.writeSignatureStore(sigs, idCol, sigCol, path,
-                bits = 48, bands = 4, sigBuckets = 16)
-            else Dedup.appendToSignatureStore(sigs, idCol, sigCol, path)
-          par3(
-            labeled(s, "q206: fold img") {
-              fold(imgSigs.join(admitted,
-                imgSigs("media_id") === admitted("doc_id"), "left_semi"),
-                "media_id", "ahash", imgPath)
+        // a doc is admitted only when novel in EVERY modality
+        val dropped = ConcurrentJobs.settleAll(s)(
+            () => labeled(s, "q206: probe img") {
+              dupIds(imgSigs, "media_id", "ahash", imgPath, video = false)
             },
-            labeled(s, "q206: fold aud") {
-              fold(audSigs.join(admitted,
-                audSigs("media_id") === admitted("doc_id"), "left_semi"),
-                "media_id", "afp", audPath)
+            () => labeled(s, "q206: probe aud") {
+              dupIds(audSigs, "media_id", "afp", audPath, video = false)
             },
-            labeled(s, "q206: fold vid") {
-              fold(vidSigs.join(admitted,
-                Multimodal.videoIdOfFrameKey(vidSigs("fid")) === admitted("doc_id"),
-                "left_semi"),
-                "fid", "fhash", vidPath)
+            () => labeled(s, "q206: probe vid") {
+              dupIds(vidSigs, "fid", "fhash", vidPath, video = true)
             })
-          val decided = labeled(s, "q206: decided") {
-            batch.select(col("doc_id"))
-              .join(admitted.withColumn("__k", lit(true)), Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("__k"), lit(false)).as("kept"))
-              .localCheckpoint()
-          }
-          results = decided :: results
-          ()
+          .reduce(_ unionByName _).distinct()
+        val admitted = labeled(s, "q206: admit") {
+          batch.select(col("doc_id"))
+            .join(dropped, Seq("doc_id"), "left_anti")
+            .localCheckpoint()
         }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      results.reduce(_ unionByName _).orderBy("doc_id")
-    } finally {
-      restoreConf()
-      rm(new java.io.File(ckRoot))
-      rm(root)
+        // fold ONLY admitted signatures into each store
+        def fold(sigs: DataFrame, idCol: String, sigCol: String,
+            path: String): Unit =
+          if (!new java.io.File(path, "_layout").isDirectory)
+            Dedup.writeSignatureStore(sigs, idCol, sigCol, path,
+              bits = 48, bands = 4, sigBuckets = 16)
+          else Dedup.appendToSignatureStore(sigs, idCol, sigCol, path)
+        ConcurrentJobs.settleAll(s)(
+          () => labeled(s, "q206: fold img") {
+            fold(imgSigs.join(admitted,
+              imgSigs("media_id") === admitted("doc_id"), "left_semi"),
+              "media_id", "ahash", imgPath)
+          },
+          () => labeled(s, "q206: fold aud") {
+            fold(audSigs.join(admitted,
+              audSigs("media_id") === admitted("doc_id"), "left_semi"),
+              "media_id", "afp", audPath)
+          },
+          () => labeled(s, "q206: fold vid") {
+            fold(vidSigs.join(admitted,
+              Multimodal.videoIdOfFrameKey(vidSigs("fid")) === admitted("doc_id"),
+              "left_semi"),
+              "fid", "fhash", vidPath)
+          })
+        val decided = labeled(s, "q206: decided") {
+          batch.select(col("doc_id"))
+            .join(admitted.withColumn("__k", lit(true)), Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              coalesce(col("__k"), lit(false)).as("kept"))
+            .localCheckpoint()
+        }
+        results = decided :: results
+      }
     }
+    results.reduce(_ unionByName _).orderBy("doc_id")
   }
 
   val all: Map[String, Q] = Map(

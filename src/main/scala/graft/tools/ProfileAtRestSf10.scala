@@ -50,11 +50,7 @@ object ProfileAtRestSf10 {
 
     val root = s"${sys.props("java.io.tmpdir")}/graft_sf10_" +
       s"${ProcessHandle.current().pid()}"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    graft.queries.MicroBatchLoop.rmTree(new java.io.File(root))
 
     val docs0 = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -227,7 +223,7 @@ object ProfileAtRestSf10 {
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes("UTF-8"))
     println(json)
-    rm(new java.io.File(root))
+    graft.queries.MicroBatchLoop.rmTree(new java.io.File(root))
     spark.stop()
   }
 }

@@ -39,14 +39,7 @@ object ProfileIvfDrift {
     val n = emb.count()
     val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_drift_" +
       s"${ProcessHandle.current().pid()}"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles match {
-        case null => ()
-        case kids => kids.foreach(rm)
-      }
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
+    graft.queries.MicroBatchLoop.rmTree(new java.io.File(path))
 
     // drift setup: seed the quantizer on the UPPER half (centroids
     // n/2 .. n/2+7), fold the lower half in frozen
@@ -104,7 +97,7 @@ object ProfileIvfDrift {
     cellBalance("kmeans ")
     val kmeansRecall = meanRecall("kmeans ")
     println(f"[seed] recall delta (kmeans - lowest-id) = ${kmeansRecall - rebuiltRecall}%.4f")
-    rm(new java.io.File(path))
+    graft.queries.MicroBatchLoop.rmTree(new java.io.File(path))
     spark.stop()
   }
 }

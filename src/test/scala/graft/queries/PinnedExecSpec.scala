@@ -10,7 +10,7 @@ import graft.SparkSpec
 class PinnedExecSpec extends SparkSpec {
 
   private def parts(bytes: Long): Long =
-    PinnedExec.derivedParts(spark, bytes).toLong
+    MicroBatchLoop.derivedParts(spark, bytes).toLong
 
   test("derivedParts: floor, bytes dominance, and core cap") {
     val cores = spark.sparkContext.defaultParallelism.toLong
