@@ -119,7 +119,7 @@ object MicroBatchLoop {
     *    where the driver lists 64 dirs in microseconds. Deployments on
     *    object stores with thousands of dirs re-lower this per loop.
     */
-  private def loopConf(parts: String): Seq[(String, String)] = Seq(
+  def loopConf(parts: String): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> parts,
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "8192")

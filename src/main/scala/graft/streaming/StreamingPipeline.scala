@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.ops.ConcurrentJobs
+import graft.queries.MicroBatchLoop
 import graft.schema.WeatherSchema
 import graft.transform.Feeds
 import graft.warehouse.ParquetWarehouse
@@ -45,23 +47,43 @@ object StreamingPipeline {
 
   /** Apply the five feeds + warehouse merges to one micro-batch — the
     * same semantics as the batch pipeline, factored for `foreachBatch`.
+    *
+    *  - The batch is sized from its plan's file-index bytes (no job):
+    *    it is coalesced to [[MicroBatchLoop.derivedParts]] of them and
+    *    cached by one `count()`, which also detects an empty batch.
+    *  - The five target merges are independent — the reference loads
+    *    its five tables through five independent pipe → procedure →
+    *    task chains — so they run side by side
+    *    ([[ConcurrentJobs.settleAll]]) under the micro-batch loop conf
+    *    (AQE off, batch-sized shuffle partitions). The conf is pinned
+    *    on `batch.sparkSession`, the stream's own cloned session, so the
+    *    pin never reaches queries on the root session.
+    *  - Every merge settles before the first failure is rethrown; the
+    *    failed batch is then not committed and replays. Replay is
+    *    idempotent: the merges that did land re-merge the same rows.
     */
   def mergeBatch(warehouse: ParquetWarehouse)(batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      val raw = batch.cache()
-      try {
-        warehouse.mergeInto("dim_location", Feeds.locationFeed(raw), Seq("location_id"))
-        warehouse.mergeInto("fact_current_day_weather",
-          Feeds.currentWeatherFeed(raw), Seq("current_weather_id"))
-        warehouse.mergeInto("fact_forecast_day_weather",
-          Feeds.forecastDayFeed(raw), Seq("forecast_day_weather_id"))
-        warehouse.mergeInto("fact_forecast_hour_weather",
-          Feeds.forecastHourFeed(raw), Seq("forecast_hour_weather_id"))
+    val s = batch.sparkSession
+    val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+      .min(Long.MaxValue).toLong
+    val parts = MicroBatchLoop.derivedParts(s, bytes)
+    MicroBatchLoop.withConf(s, MicroBatchLoop.loopConf(parts): _*) {
+      val raw = batch.coalesce(parts.toInt).cache()
+      try if (raw.count() > 0) {
         val cond = Feeds.conditionFeed(raw)
           .withColumn("condition_name",
             Feeds.normalizeConditionName(col("condition_code"), col("condition_name")))
           .select("condition_code", "condition_name")
-        warehouse.insertNewInto("dim_condition", cond, Seq("condition_code"))
+        ConcurrentJobs.settleAll(s)(
+          () => warehouse.mergeInto("dim_location", Feeds.locationFeed(raw),
+            Seq("location_id"), bytes),
+          () => warehouse.mergeInto("fact_current_day_weather",
+            Feeds.currentWeatherFeed(raw), Seq("current_weather_id"), bytes),
+          () => warehouse.mergeInto("fact_forecast_day_weather",
+            Feeds.forecastDayFeed(raw), Seq("forecast_day_weather_id"), bytes),
+          () => warehouse.mergeInto("fact_forecast_hour_weather",
+            Feeds.forecastHourFeed(raw), Seq("forecast_hour_weather_id"), bytes),
+          () => warehouse.insertNewInto("dim_condition", cond, Seq("condition_code"), bytes))
       } finally raw.unpersist()
     }
   }

@@ -18,6 +18,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    deployment partitions the target by a key prefix / date and rewrites
   *    only affected partitions (dynamic partition overwrite); the merge
   *    algebra below is unchanged.
+  *  - a merge's cost is set by the batch, not the session: the streaming
+  *    pipeline runs each micro-batch's five merges side by side under a
+  *    batch-sized, non-adaptive conf, and [[ParquetWarehouse]] writes a
+  *    merge result as ⌈bytes / split⌉ files, so neither the task count
+  *    nor the file count of an incremental merge grows with the cycles.
   *  - stage-internal duplicates are resolved *last-wins* via one window
   *    (the reference relies on ≤1 row per key per batch; MERGE would throw
   *    on duplicates — we make the semantics explicit instead).
