@@ -114,6 +114,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.io.LocalFs.install(spark)
     // optional comma-separated substring filter for targeted re-measures
     // while iterating on one query; the driver never sets it, so the
     // default (unset → full surface) keeps the contract byte-identical

@@ -46,6 +46,7 @@ object PipelineMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.io.LocalFs.install(spark)
 
     // ---- Extract: fixture stands in for the REST fetch (offline env) ----
     Fixtures.writeRawJsonFiles(spark, s"$workDir/raw", fetchDates = dates)

@@ -18,10 +18,14 @@ object MicroBatchLoop {
   /** Ephemeral scratch base: tmpfs when the host has one — loop scratch
     * (staged batch files, checkpoints, per-run stores) is written and
     * read back within one query invocation, so disk persistence buys
-    * nothing and the partitioned-store fan-out (hundreds of small files
-    * per append) is metadata-op-bound. A durable deployment writes its
-    * stores and checkpoints to real storage — layout, not location, is
-    * the operator contract.
+    * nothing. The per-file cost of the partitioned-store fan-out
+    * (hundreds of small files per append) was not the filesystem's
+    * metadata ops: profiled on a 4-core host without `libhadoop`, it was
+    * Hadoop's local filesystem forking `chmod` for every file it created
+    * and `readlink` twice per checkpoint-log rename (~3,700 processes per
+    * pass of the six store loops), which [[graft.io.LocalFs]] removes. A
+    * durable deployment writes its stores and checkpoints to real
+    * storage — layout, not location, is the operator contract.
     */
   private val scratchBase: java.io.File =
     if (new java.io.File("/dev/shm").isDirectory) new java.io.File("/dev/shm")

@@ -214,41 +214,42 @@ object StreamingQueries {
   private val q89: Q = (s, dir) => {
     val root = java.nio.file.Files
       .createTempDirectory(s"graft_q89_${runSeq.incrementAndGet()}_").toFile
-    val in = new java.io.File(root, "in")
-    val arch = new java.io.File(root, "archive")
-    val ev = s.read.parquet(s"$dir/events.parquet")
-    ev.repartition(4).write.mode("overwrite").parquet(in.toString)
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("cleanSource", "archive")
-      .option("sourceArchiveDir", arch.toString)
-      .parquet(in.toString)
-    val agg = stream.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
-    val out = runToCompletion(agg, OutputMode.Complete())
-    def parquetsUnder(f: java.io.File): Int =
-      if (!f.exists) 0
-      else f.listFiles.toSeq.map { c =>
-        if (c.isDirectory) parquetsUnder(c)
-        else if (c.getName.endsWith(".parquet")) 1 else 0
-      }.sum
-    // The cleaner may still be mid-rename between the two listings (a
-    // file absent from BOTH for a moment), so poll for a CONSISTENT
-    // snapshot: all 4 files accounted for, at least 3 already archived
-    // (batches 2..4 enqueue cleanup of batches 1..3; the final batch's
-    // file may or may not be cleaned depending on a trailing fetch).
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    var archived = parquetsUnder(arch)
-    var remaining = parquetsUnder(in)
-    while ((archived < 3 || archived + remaining != 4) && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      archived = parquetsUnder(arch)
-      remaining = parquetsUnder(in)
-    }
-    require(archived >= 3 && archived + remaining == 4,
-      s"archive-and-delete failed: archived=$archived remaining=$remaining")
-    rmTree(root)
-    out.orderBy("event_type")
+    try {
+      val in = new java.io.File(root, "in")
+      val arch = new java.io.File(root, "archive")
+      val ev = s.read.parquet(s"$dir/events.parquet")
+      ev.repartition(4).write.mode("overwrite").parquet(in.toString)
+      val stream = s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("cleanSource", "archive")
+        .option("sourceArchiveDir", arch.toString)
+        .parquet(in.toString)
+      val agg = stream.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
+      val out = runToCompletion(agg, OutputMode.Complete())
+      def parquetsUnder(f: java.io.File): Int =
+        if (!f.exists) 0
+        else f.listFiles.toSeq.map { c =>
+          if (c.isDirectory) parquetsUnder(c)
+          else if (c.getName.endsWith(".parquet")) 1 else 0
+        }.sum
+      // The cleaner may still be mid-rename between the two listings (a
+      // file absent from BOTH for a moment), so poll for a CONSISTENT
+      // snapshot: all 4 files accounted for, at least 3 already archived
+      // (batches 2..4 enqueue cleanup of batches 1..3; the final batch's
+      // file may or may not be cleaned depending on a trailing fetch).
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      var archived = parquetsUnder(arch)
+      var remaining = parquetsUnder(in)
+      while ((archived < 3 || archived + remaining != 4) && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        archived = parquetsUnder(arch)
+        remaining = parquetsUnder(in)
+      }
+      require(archived >= 3 && archived + remaining == 4,
+        s"archive-and-delete failed: archived=$archived remaining=$remaining")
+      out.orderBy("event_type")
+    } finally rmTree(root)
   }
 
   /** Streaming incremental dedup — q113's maintained-index loop composed

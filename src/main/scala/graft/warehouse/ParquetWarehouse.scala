@@ -1,5 +1,6 @@
 package graft.warehouse
 
+import graft.io.LocalFs
 import graft.queries.MicroBatchLoop.rmTree
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -29,9 +30,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    sets it), so [[read]] passes it to `spark.read.schema(..)` instead
   *    of running a schema-inference job. A table this JVM did not write
   *    is read with inference.
+  *  - '''Filesystem.''' Constructing a warehouse installs graft's local
+  *    filesystem ([[graft.io.LocalFs]]) on `spark`.
   */
 final class ParquetWarehouse(spark: SparkSession, root: String) {
   import ParquetWarehouse._
+
+  LocalFs.install(spark)
 
   def path(table: String): String = s"$root/$table"
 
