@@ -94,27 +94,7 @@ object Bench {
       Runtime.getRuntime.availableProcessors().toString)
     val warmups = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUPS", "2").toInt
     val measured = sys.env.getOrElse("SPARK_GRAFT_BENCH_MEASURED", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // single-file local inputs: smaller splits restore scan parallelism
-      // (at cluster scale the 128MB default is correct; this is a local
-      // I/O-shape knob, not a semantic one)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // local-FS listing is driver-fast: stored indexes here have
-      // layout-bounded partition-dir counts (16-256), and the default
-      // 32-path threshold turns every probe's listing into a cluster
-      // job (~0.2 s scheduling for microseconds of I/O). Object-store
-      // deployments with thousands of dirs keep the parallel default —
-      // same local-I/O-shape reasoning as maxPartitionBytes above.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.io.LocalFs.install(spark)
+    val spark = session(cpus)
     // optional comma-separated substring filter for targeted re-measures
     // while iterating on one query; the driver never sets it, so the
     // default (unset → full surface) keeps the contract byte-identical
@@ -250,5 +230,34 @@ object Bench {
     val shortQs = obj(results.map { case (n, mn, _, _, _) => n.takeWhile(_ != '_') -> r3(mn) })
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$shortQs,"n_failed":$nFailed,"n_flaky":${flakyNames.size},"n_one_run":$nOneRun,"n_wide_gap":$nWideGap,"n_regressed":${states.count(st => st.times.nonEmpty && st.regressedVsPrior)},"sf":"$sfDir","full":"$outPath"}""")
     spark.stop()
+  }
+
+  /** The `local[cpus]` session the bench measures under — and
+    * [[Verify]] checks the oracle under, so correctness is judged on
+    * the conf that is benchmarked — on graft's local filesystem.
+    */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // single-file local inputs: smaller splits restore scan parallelism
+      // (at cluster scale the 128MB default is correct; this is a local
+      // I/O-shape knob, not a semantic one)
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      // local-FS listing needs no job: stored indexes here have
+      // layout-bounded partition-dir counts (16-256), and the default
+      // 32-path threshold turns every probe's listing into a cluster
+      // job (~0.2 s scheduling for microseconds of I/O). Object-store
+      // deployments with thousands of dirs keep the parallel default —
+      // same local-I/O-shape reasoning as maxPartitionBytes above.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.io.LocalFs.install(spark)
+    spark
   }
 }

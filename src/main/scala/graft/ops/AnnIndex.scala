@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.functions.GraftFunctions
+import graft.io.Swap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -91,6 +93,7 @@ object AnnIndex {
   private def store(embeddings: DataFrame, idCol: String, vecCol: String,
       path: String, numPlanes: Int, dim: Int,
       mode: org.apache.spark.sql.SaveMode, saltBuckets: Int = 1): Unit = {
+    Swap.healed(embeddings.sparkSession, path)
     GraftFunctions.register(embeddings.sparkSession)
     val d =
       if (dim > 0) dim
@@ -154,6 +157,7 @@ object AnnIndex {
   private def storeQuantized(embeddings: DataFrame, idCol: String,
       vecCol: String, path: String, numPlanes: Int, dim: Int,
       mode: org.apache.spark.sql.SaveMode): Unit = {
+    Swap.healed(embeddings.sparkSession, path)
     GraftFunctions.register(embeddings.sparkSession)
     val d =
       if (dim > 0) dim
@@ -182,7 +186,7 @@ object AnnIndex {
       queryVec: Array[Double], k: Int = 5, numPlanes: Int = 8,
       excludeId: Option[Long] = None): DataFrame =
     rankQuantized(spark,
-      tombstoneMask(spark, path, idCol, spark.read.parquet(path)
+      tombstoneMask(spark, path, idCol, rows(spark, path)
         .filter(col("bucket") === lit(bucketOf(queryVec, numPlanes)))),
       idCol, queryVec, k, excludeId)
 
@@ -198,7 +202,7 @@ object AnnIndex {
       queryVec: Array[Double], k: Int = 5, numPlanes: Int = 8,
       excludeId: Option[Long] = None): DataFrame =
     rankQuantized(spark,
-      tombstoneMask(spark, path, idCol, spark.read.parquet(path)
+      tombstoneMask(spark, path, idCol, rows(spark, path)
         .filter(col("bucket").isin(probeBucketsOf(queryVec, numPlanes): _*))),
       idCol, queryVec, k, excludeId)
 
@@ -232,6 +236,14 @@ object AnnIndex {
       .limit(k)
   }
 
+  /** The index's rows, read after healing its bucket swaps
+    * ([[graft.io.Swap]]) — every read of the index goes through here.
+    */
+  private[ops] def rows(spark: SparkSession, path: String): DataFrame = {
+    Swap.healed(spark, path)
+    spark.read.parquet(path)
+  }
+
   // ------------------------------------------------ delete / tombstones
 
   /** The index's tombstone relation (`_tombstones/` — underscore-hidden
@@ -240,7 +252,7 @@ object AnnIndex {
     */
   private[ops] def tombstonesOf(spark: SparkSession, path: String,
       idCol: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
+    val p = new Path(s"$path/_tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) Some(spark.read.parquet(p.toString).toDF(idCol))
     else None
@@ -293,7 +305,7 @@ object AnnIndex {
     val buckets = a.select(col("bucket")).distinct()
       .collect().map(_.getString(0)).toSeq
     val store = tombstoneMask(spark, path, idCol,
-        spark.read.parquet(path)
+        rows(spark, path)
           .filter(col("bucket").isin(buckets.map(x => x: Any): _*)))
       .select(col(idCol).as("corpus_id"), col("v").as("v_b"),
         col("nrm").as("nrm_b"), col("bucket"))
@@ -327,7 +339,7 @@ object AnnIndex {
   def cosinePairsFromIndex(spark: SparkSession, path: String, idCol: String,
       threshold: Double): DataFrame = {
     GraftFunctions.register(spark)
-    val store = tombstoneMask(spark, path, idCol, spark.read.parquet(path))
+    val store = tombstoneMask(spark, path, idCol, rows(spark, path))
       .select(col(idCol).as("id"), col("v"), col("nrm"), col("bucket"))
     val a = store.toDF("id_a", "v_a", "nrm_a", "bucket")
     val b = store.toDF("id_b", "v_b", "nrm_b", "bucket")
@@ -352,7 +364,7 @@ object AnnIndex {
     * exactly that ratio, silently.
     */
   def writeDriftProfile(spark: SparkSession, path: String): Unit = {
-    spark.read.parquet(path)
+    rows(spark, path)
       .groupBy(col("bucket")).agg(count(lit(1)).as("nr"))
       .agg(max(col("nr")).as("build_max"), sum(col("nr")).as("build_total"))
       .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -411,9 +423,8 @@ object AnnIndex {
     */
   def deleteFromIndex(ids: DataFrame, idCol: String, path: String): Unit = {
     val spark = ids.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"deleteFromIndex: no index at $path")
+    require(Swap.healed(spark, path).exists(new Path(path)),
+      s"deleteFromIndex: no index at $path")
     val doomed = tombstonesOf(spark, path, idCol)
       .foldLeft(ids.select(col(idCol)).distinct())(
         (d, ts) => d.join(ts, Seq(idCol), "left_anti"))
@@ -429,22 +440,20 @@ object AnnIndex {
     * the index: one column-pruned (id, partition) scan finds the
     * buckets/cells that hold doomed rows, ONE distributed job rewrites
     * exactly those directories without the tombstoned ids (the
-    * [[compactBuckets]] read-flagged-leaves/swap-per-dir shape), and
-    * `_tombstones/` is dropped LAST so the mask stays in place across
-    * a mid-purge crash (a re-run finishes the job). Same
+    * [[compactBuckets]] read-flagged-leaves/swap-per-dir shape; a
+    * directory whose every row was doomed is swapped for an empty
+    * one), and `_tombstones/` is dropped LAST so the mask stays in
+    * place across a mid-purge crash (a re-run finishes the job). Same
     * maintenance-lock caveat as [[compactBuckets]].
     */
   def purgeIndex(spark: SparkSession, path: String, idCol: String,
       partCol: String = "bucket"): Unit = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Swap.healed(spark, path)
     val tsPath = new Path(s"$path/_tombstones")
     if (!fs.exists(tsPath)) return
     val ts = spark.read.parquet(tsPath.toString).toDF(idCol)
       .distinct().localCheckpoint()
-    def partFiles(dir: Path) = fs.listStatus(dir)
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
     if (ts.head(1).nonEmpty) {
       val affected = spark.read.parquet(path)
         .join(ts, Seq(idCol), "leftsemi")
@@ -461,13 +470,9 @@ object AnnIndex {
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy(partCol).parquet(tmp.toString)
         dirs.foreach { dir =>
-          partFiles(dir).foreach(f => fs.delete(f.getPath, false))
-          val src = new Path(tmp, dir.getName)
-          // a directory whose every row was doomed has no tmp output —
-          // its data files are simply gone (the empty dir stays, which
-          // partition discovery tolerates)
-          if (fs.exists(src)) partFiles(src).foreach(f =>
-            fs.rename(f.getPath, new Path(dir, f.getPath.getName)))
+          val next = new Path(tmp, dir.getName)
+          if (!fs.exists(next)) fs.mkdirs(next)
+          Swap.swapIn(fs, dir, next)
         }
         fs.delete(tmp, true)
       }
@@ -495,8 +500,8 @@ object AnnIndex {
     // the tombstone relation itself) must not travel to a destination
     // that carries no _tombstones dir — that would silently resurrect
     // every deleted vector
-    val tsPath = new org.apache.hadoop.fs.Path(s"$srcPath/_tombstones")
-    val fs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tsPath = new Path(s"$srcPath/_tombstones")
+    val fs = Swap.healed(spark, srcPath)
     val src = spark.read.parquet(srcPath)
     val live =
       if (fs.exists(tsPath)) {
@@ -517,17 +522,14 @@ object AnnIndex {
     * the ingest-hot buckets, never the index size. Layout-only by the
     * same argument as [[compact]] — probes are layout-agnostic
     * (`AnnIndexSpec` pins probe equality and the untouched-bucket file
-    * lists). The in-place swap is write-tmp → delete-old → move-in; a
-    * concurrent probe may transiently see a bucket twice or partially,
-    * so at real scale this runs under the table's maintenance lock
-    * (exactly like OPTIMIZE in table formats with a commit protocol).
-    * Returns the compacted bucket values, sorted.
+    * lists). Each flagged bucket dir is swapped in whole, under
+    * [[graft.io.Swap]]'s single-maintenance-writer contract. Returns
+    * the compacted bucket values, sorted.
     */
   def compactBuckets(spark: SparkSession, path: String,
       maxFilesPerBucket: Int = 4, partCol: String = "bucket"): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Swap.healed(spark, path)
     def partFiles(dir: Path) = fs.listStatus(dir)
       .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
     val over = fs.listStatus(root)
@@ -552,11 +554,7 @@ object AnnIndex {
         .repartition(col(partCol))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy(partCol).parquet(tmp.toString)
-      over.foreach { dir =>
-        partFiles(dir).foreach(f => fs.delete(f.getPath, false))
-        partFiles(new Path(tmp, dir.getName)).foreach(f =>
-          fs.rename(f.getPath, new Path(dir, f.getPath.getName)))
-      }
+      over.foreach(dir => Swap.swapIn(fs, dir, new Path(tmp, dir.getName)))
       fs.delete(tmp, true)
     }
     over.map(_.getName.stripPrefix(s"$partCol=")).toSeq
@@ -573,7 +571,7 @@ object AnnIndex {
       excludeId: Option[Long] = None): DataFrame = {
     GraftFunctions.register(spark)
     val qv = typedlit(queryVec.toSeq)
-    val base = tombstoneMask(spark, path, idCol, spark.read.parquet(path)
+    val base = tombstoneMask(spark, path, idCol, rows(spark, path)
       .filter(col("bucket") === lit(bucketOf(queryVec, numPlanes))))
     val probed = excludeId.fold(base)(id => base.filter(col(idCol) =!= id))
     probed
@@ -606,7 +604,7 @@ object AnnIndex {
     GraftFunctions.register(spark)
     val qv = typedlit(queryVec.toSeq)
     val buckets = probeBucketsOf(queryVec, numPlanes)
-    val base = tombstoneMask(spark, path, idCol, spark.read.parquet(path)
+    val base = tombstoneMask(spark, path, idCol, rows(spark, path)
       .filter(col("bucket").isin(buckets: _*)))
     val probed = excludeId.fold(base)(id => base.filter(col(idCol) =!= id))
     probed

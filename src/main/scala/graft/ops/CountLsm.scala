@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.io.Swap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -13,31 +15,23 @@ import org.apache.spark.sql.functions.col
   *
   * What lives here is the lifecycle plumbing those stores share
   * verbatim, not the model arithmetic:
-  *  - [[healedRoot]]: the `counts/` root, healing the one compaction
-  *    crash window (live renamed aside, tmp not yet swapped in);
+  *  - [[healedRoot]]: the `counts/` root, healed on every access;
   *  - [[foldedBids]]: the ledger of batch ids ever folded into
   *    `__compacted`, so a crash-RETRY of an already-compacted batch is
   *    a no-op instead of a double count;
-  *  - [[compactSwap]]: the atomic-as-one-rename-pair swap of a freshly
-  *    folded `counts/` root, crash window healed by [[healedRoot]].
+  *  - [[compactSwap]]: the compaction's swap of a freshly folded
+  *    `counts/` root.
+  * Both swap and heal are [[graft.io.Swap]]'s, with one store-specific
+  * drop ([[retireAndDrop]]): the old root's original deltas are
+  * retired, not deleted, so a heal after a cut compaction finishes the
+  * retirement and no folded batch vanishes from the snapshot set.
   */
 private[ops] object CountLsm {
 
-  /** The store's `counts/` root, healing the compaction crash windows:
-    * if `counts/` is missing but the renamed-aside `.counts_old`
-    * survives (a crash between [[compactSwap]]'s two renames), restore
-    * it — no committed batch is ever lost. If BOTH survive (a crash
-    * after the swap, mid-retirement), finish retiring the old root's
-    * original delta partitions into `retired/` and drop it — no folded
-    * batch ever vanishes from the snapshot-serving set either.
-    */
+  /** The store's `counts/` root, after [[graft.io.Swap.heal]]. */
   def healedRoot(spark: SparkSession, path: String): String = {
-    import org.apache.hadoop.fs.Path
     val live = new Path(s"$path/counts")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(s"$path/.counts_old")
-    if (!fs.exists(live) && fs.exists(old)) fs.rename(old, live)
-    else if (fs.exists(live) && fs.exists(old)) retireAndDrop(spark, path, old)
+    Swap.heal(Swap.fs(spark, path), live, retireAndDrop(path))
     live.toString
   }
 
@@ -51,10 +45,7 @@ private[ops] object CountLsm {
     * Idempotent across crash-retries: an already-retired bid's stale
     * copy is simply dropped with the old root.
     */
-  private def retireAndDrop(spark: SparkSession, path: String,
-      oldRoot: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = oldRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def retireAndDrop(path: String): Swap.Drop = (fs, oldRoot) => {
     for {
       sub <- fs.listStatus(oldRoot).toSeq if sub.isDirectory
       part <- fs.listStatus(sub.getPath).toSeq
@@ -78,7 +69,6 @@ private[ops] object CountLsm {
     * proportional, never data-proportional).
     */
   def foldedBids(spark: SparkSession, root: String): Set[String] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(s"$root/folded")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Set.empty
@@ -107,42 +97,26 @@ private[ops] object CountLsm {
     df.withColumn("bid", col("bid").cast("string"))
   }
 
-  /** The compaction swap: `writeTmp` populates a fresh root at `tmp`
-    * (the caller writes its folded `bid=__compacted` relations there),
-    * this persists the accumulated folded-bid ledger beside them, then
-    * swaps live→old, tmp→live. The one crash window between the two
-    * renames is healed by [[healedRoot]] on the next access.
+  /** The compaction swap: `writeTmp` populates a fresh root (the
+    * caller writes its folded `bid=__compacted` relations there), this
+    * persists the accumulated folded-bid ledger beside them, then swaps
+    * it in for `counts/` ([[graft.io.Swap.replace]]).
     *
-    * SINGLE-WRITER CONTRACT: the count stores assume one maintenance
-    * writer at a time (the standard LSM discipline — ingest batches
-    * may interleave with each other because each owns its `bid=`
-    * partition, but compaction must not race an ingest: a
-    * `writeCountBatch` interleaving with this swap could land its
-    * delta partitions in the root being renamed aside while its commit
-    * marker lands in the new root, leaving a marker with no counts).
-    * The [[foldedBids]] ledger covers sequential retries only; run
-    * compaction from the one scheduler that owns the store's
-    * maintenance window, exactly as the BM25/ANN compactions are run.
+    * SINGLE-WRITER CONTRACT ([[graft.io.Swap]]'s): compaction must not
+    * race an ingest — a `writeCountBatch` interleaving with this swap
+    * could land its delta partitions in the root being renamed aside
+    * while its commit marker lands in the new root, leaving a marker
+    * with no counts. Ingest batches may interleave with each other
+    * (each owns its `bid=` partition). The [[foldedBids]] ledger covers
+    * sequential retries only.
     */
   def compactSwap(spark: SparkSession, path: String, root: String,
       foldedNow: Seq[String])(writeTmp: String => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(root)
-    val tmp = new Path(s"$path/.counts_compact_tmp")
-    val old = new Path(s"$path/.counts_old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    writeTmp(tmp.toString)
-    foldedNow.toDF("bid").coalesce(1).write.parquet(s"$tmp/folded")
-    if (!fs.rename(live, old))
-      throw new java.io.IOException(s"compactSwap: cannot move $live")
-    if (!fs.rename(tmp, live)) {
-      fs.rename(old, live)
-      throw new java.io.IOException(s"compactSwap: cannot swap $tmp in")
+    Swap.replace(Swap.fs(spark, path), new Path(root), retireAndDrop(path)) { tmp =>
+      writeTmp(tmp.toString)
+      foldedNow.toDF("bid").coalesce(1).write.parquet(s"$tmp/folded")
     }
-    retireAndDrop(spark, path, old)
   }
 
   // ---- snapshots: generation-pinned serving over the delta LSM ----
@@ -190,7 +164,6 @@ private[ops] object CountLsm {
     */
   def snapshotBids(spark: SparkSession, path: String,
       snapId: String): Set[String] = {
-    import org.apache.hadoop.fs.Path
     require(snapId.matches("[A-Za-z0-9_-]+"),
       s"snapshot id '$snapId' must be a plain partition token")
     val p = new Path(s"$path/snapshots/snap=$snapId")
@@ -204,7 +177,6 @@ private[ops] object CountLsm {
 
   /** Ids of every live snapshot manifest under the store. */
   def liveSnapshotIds(spark: SparkSession, path: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(s"$path/snapshots")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
@@ -218,7 +190,6 @@ private[ops] object CountLsm {
     */
   def dropSnapshot(spark: SparkSession, path: String,
       snapId: String): Unit = {
-    import org.apache.hadoop.fs.Path
     require(snapId.matches("[A-Za-z0-9_-]+"),
       s"snapshot id '$snapId' must be a plain partition token")
     val p = new Path(s"$path/snapshots/snap=$snapId")
@@ -231,7 +202,6 @@ private[ops] object CountLsm {
     * driver-side bid sets; data files are never read.
     */
   def vacuumRetired(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val needed = liveSnapshotIds(spark, path)
       .flatMap(snapshotBids(spark, path, _)).toSet
     val ret = new Path(s"$path/retired")
@@ -253,7 +223,6 @@ private[ops] object CountLsm {
     */
   def deltasAtSnapshot(spark: SparkSession, path: String, sub: String,
       manifest: Set[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.hadoop.fs.Path
     val root = healedRoot(spark, path)
     val folded = foldedBids(spark, root)
     val live = readDeltas(spark, root, sub)

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.io.Swap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -593,7 +595,7 @@ object Dedup {
   def storedLayoutOf(spark: org.apache.spark.sql.SparkSession,
       path: String): Int =
     storedLayoutCache.computeIfAbsent(path, _ => {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_layout")
+      val p = new Path(s"$path/_layout")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) spark.read.parquet(p.toString).head().getInt(0)
       else 0
@@ -619,11 +621,8 @@ object Dedup {
       path: String, threshold: Double = 0.5,
       maxShingleDf: Int = 0): DataFrame = {
     val spark = batchShingles.sparkSession
+    val hasPostings = Swap.healed(spark, path).exists(new Path(s"$path/postings"))
     val nb = storedLayoutOf(spark, path)
-    val postingsPath = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val hasPostings = postingsPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(postingsPath)
     // flat/legacy layout, or a bootstrapping loop whose layout landed
     // before its first postings append → the full-index read (which
     // handles the missing-index case as the empty index)
@@ -678,10 +677,8 @@ object Dedup {
       idCol: String, path: String, shBucketsIfNew: Int = 0): Unit = {
     val spark = batchShingles.sparkSession
     val mode = org.apache.spark.sql.SaveMode.Append
-    val layoutPath = new org.apache.hadoop.fs.Path(s"$path/_layout")
-    if (shBucketsIfNew > 0 && !layoutPath
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(layoutPath))
+    val fs = Swap.healed(spark, path)
+    if (shBucketsIfNew > 0 && !fs.exists(new Path(s"$path/_layout")))
       writeStoredLayout(spark, path, shBucketsIfNew)
     val nb = storedLayoutOf(spark, path)
     val keep = batchShingles
@@ -708,7 +705,7 @@ object Dedup {
     */
   private def storedTombstonesOf(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
+    val p = new Path(s"$path/tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
   }
@@ -739,9 +736,8 @@ object Dedup {
   def deleteFromStoredIndex(ids: DataFrame, idCol: String,
       path: String): Unit = {
     val spark = ids.sparkSession
-    val sizesPath = new org.apache.hadoop.fs.Path(s"$path/sizes")
-    val fs = sizesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(sizesPath),
+    val sizesPath = new Path(s"$path/sizes")
+    require(Swap.healed(spark, path).exists(sizesPath),
       s"deleteFromStoredIndex: no shingle index at $path")
     val indexed = spark.read.parquet(sizesPath.toString).select(col(idCol))
       .join(ids.select(col(idCol)).distinct(), Seq(idCol), "leftsemi")
@@ -766,38 +762,20 @@ object Dedup {
   /** Physically remove tombstoned documents from the stored index —
     * the major-compaction half of [[deleteFromStoredIndex]]'s LSM
     * delete: postings and sizes are rewritten without the tombstoned
-    * rows (rename-aside swaps, the [[compactStoredDfs]] discipline),
-    * dfs is RECOMPUTED EXACTLY from the purged postings (folding all
-    * deltas and healing any torn-delete drift in one pass), and
+    * rows ([[graft.io.Swap]]), dfs is RECOMPUTED EXACTLY from the purged
+    * postings (folding all deltas and healing any torn-delete drift in
+    * one pass), and
     * `tombstones/` is dropped LAST so the mask stays in place across a
     * mid-purge crash (a re-run finishes the job). Same maintenance-
     * lock caveat as [[compactStoredDfs]]: drain writers first.
     */
   def purgeStoredIndex(spark: org.apache.spark.sql.SparkSession,
       idCol: String, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Swap.healed(spark, path)
     storedTombstonesOf(spark, path).filter(_.head(1).nonEmpty).foreach { ts =>
       val t = ts.select(col(idCol)).distinct().localCheckpoint()
-      def swapIn(rel: String)(write: Path => Unit): Unit = {
-        val live = new Path(s"$path/$rel")
-        val tmp = new Path(s"$path/.${rel}_purge_tmp")
-        val old = new Path(s"$path/.${rel}_purge_old")
-        fs.delete(tmp, true)
-        fs.delete(old, true)
-        write(tmp)
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"purgeStoredIndex: cannot move $live aside")
-        if (!fs.rename(tmp, live)) {
-          fs.rename(old, live)
-          throw new java.io.IOException(s"purgeStoredIndex: cannot swap $tmp in")
-        }
-        fs.delete(old, true)
-        ()
-      }
       val nb = storedLayoutOf(spark, path)
-      swapIn("postings") { tmp =>
+      Swap.replace(fs, new Path(s"$path/postings")) { tmp =>
         // the read-back carries the sb partition column when bucketed —
         // rewrite under the same frozen layout
         val rel = spark.read.parquet(s"$path/postings")
@@ -806,11 +784,11 @@ object Dedup {
           .write.partitionBy("sb").parquet(tmp.toString)
         else rel.write.parquet(tmp.toString)
       }
-      swapIn("sizes") { tmp =>
+      Swap.replace(fs, new Path(s"$path/sizes")) { tmp =>
         spark.read.parquet(s"$path/sizes")
           .join(t, Seq(idCol), "left_anti").write.parquet(tmp.toString)
       }
-      swapIn("dfs") { tmp =>
+      Swap.replace(fs, new Path(s"$path/dfs")) { tmp =>
         val rel = spark.read.parquet(s"$path/postings")
           .groupBy(col("sh")).agg(count(lit(1)).as("df"))
         if (nb > 0) rel.withColumn("sb", shBucketCol(col("sh"), nb))
@@ -832,10 +810,7 @@ object Dedup {
     */
   def readStoredIndex(spark: org.apache.spark.sql.SparkSession,
       idCol: String, path: String, shingleK: Int = 3): ShingleIndex = {
-    val exists = new org.apache.hadoop.fs.Path(s"$path/postings")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(s"$path/postings"))
-    if (!exists) {
+    if (!Swap.healed(spark, path).exists(new Path(s"$path/postings"))) {
       import spark.implicits._
       val empty = Seq.empty[(Long, String)].toDF(idCol, "sh")
       ShingleIndex(empty,
@@ -858,48 +833,27 @@ object Dedup {
   }
 
   /** Per-relation OPTIMIZE for the stored index's dfs deltas: fold the
-    * appended delta rows back to one row per shingle (write-tmp →
-    * swap, the [[graft.ops.AnnIndex.compactBuckets]] maintenance
-    * shape). Read-time semantics are unchanged — the read aggregate
-    * sums whatever granularity is on disk.
+    * appended delta rows back to one row per shingle and swap the
+    * result in ([[graft.io.Swap]]). Read-time semantics are unchanged —
+    * the read aggregate sums whatever granularity is on disk.
     *
-    * Requires EXCLUSIVE access to the index (the same maintenance-lock
-    * caveat as [[graft.ops.AnnIndex.compactBuckets]]): a delta appended
-    * by a concurrent [[appendToStoredIndex]] between the aggregate read
-    * and the swap would be destroyed unmerged — drain writers first.
-    * The swap itself is crash-recoverable: the live relation is renamed
-    * ASIDE (never deleted before its replacement is in place), so a
-    * crash leaves either the old `dfs/` intact, or the compacted one
-    * plus a stale `.dfs_compact_old/` to garbage-collect — at no point
-    * is the document-frequency relation missing or partial.
+    * Requires EXCLUSIVE access to the index ([[graft.io.Swap]]'s
+    * single-maintenance-writer contract): a delta appended by a
+    * concurrent [[appendToStoredIndex]] between the aggregate read and
+    * the swap would be destroyed unmerged — drain writers first.
     */
   def compactStoredDfs(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val dfs = new Path(s"$path/dfs")
-    val fs = dfs.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$path/.dfs_compact_tmp")
-    val old = new Path(s"$path/.dfs_compact_old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    val folded = spark.read.parquet(dfs.toString)
-      .groupBy(col("sh")).agg(sum(col("df")).as("df"))
-    val nb = storedLayoutOf(spark, path)
-    if (nb > 0) folded.withColumn("sb", shBucketCol(col("sh"), nb))
-      .repartition(col("sb"))
-      .write.partitionBy("sb").parquet(tmp.toString)
-    else folded.write.parquet(tmp.toString)
-    // rename-aside swap: dfs → old, tmp → dfs, then drop old. A crash
-    // after the first rename but before the second leaves `old` as the
-    // recovery copy; one never deletes the only copy of the relation.
-    if (!fs.rename(dfs, old))
-      throw new java.io.IOException(s"compactStoredDfs: cannot move $dfs aside")
-    if (!fs.rename(tmp, dfs)) {
-      fs.rename(old, dfs) // restore the live relation before failing
-      throw new java.io.IOException(s"compactStoredDfs: cannot swap $tmp in")
+    Swap.replace(Swap.healed(spark, path), dfs) { tmp =>
+      val folded = spark.read.parquet(dfs.toString)
+        .groupBy(col("sh")).agg(sum(col("df")).as("df"))
+      val nb = storedLayoutOf(spark, path)
+      if (nb > 0) folded.withColumn("sb", shBucketCol(col("sh"), nb))
+        .repartition(col("sb"))
+        .write.partitionBy("sb").parquet(tmp.toString)
+      else folded.write.parquet(tmp.toString)
     }
-    fs.delete(old, true)
-    ()
   }
 
   /** Unordered candidate intersections computed from a
@@ -1225,6 +1179,17 @@ object Dedup {
       (r.getInt(0), r.getInt(1), r.getInt(2))
     })
 
+  /** Heal every swap under the signature store and its `bands/`
+    * buckets ([[graft.io.Swap]]) — the first step of every store entry
+    * point; returns the filesystem.
+    */
+  private def healedSigStore(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.hadoop.fs.FileSystem = {
+    val fs = Swap.healed(spark, path)
+    Swap.healAll(fs, new Path(s"$path/bands"))
+    fs
+  }
+
   /** Fold a batch of NEW signatures into the store: two partition
     * appends, batch-proportional at any store size. Write order =
     * crash-safety order (the [[graft.ops.Retrieval.appendToBm25Index]]
@@ -1237,6 +1202,7 @@ object Dedup {
   def appendToSignatureStore(sigs: DataFrame, idCol: String,
       sigCol: String, path: String): Unit = {
     val spark = sigs.sparkSession
+    healedSigStore(spark, path)
     val (bits, bands, sigBuckets) = signatureStoreLayout(spark, path)
     val fresh = sigs
       .join(spark.read.parquet(s"$path/sigs").select(col(idCol)),
@@ -1263,12 +1229,14 @@ object Dedup {
     * id stays blocked by the `sigs/` guard until the purge.
     */
   def deleteFromSignatureStore(ids: DataFrame, idCol: String,
-      path: String): Unit =
+      path: String): Unit = {
+    healedSigStore(ids.sparkSession, path)
     AnnIndex.deleteFromIndex(ids.select(col(idCol).as("id")), "id",
       s"$path/bands")
+  }
 
   /** Physically remove tombstoned signatures: `sigs/` rewritten first
-    * (rename-aside — the record of truth and append-guard key must
+    * ([[graft.io.Swap]] — the record of truth and append-guard key must
     * drop the ids before the mask can), then [[AnnIndex.purgeIndex]]
     * over the `sb=` partitions (only directories holding doomed rows
     * rewritten; `bands/_tombstones` dropped LAST, so the mask holds
@@ -1276,28 +1244,18 @@ object Dedup {
     */
   def purgeSignatureStore(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val tsPath = new Path(s"$path/bands/_tombstones")
-    val fs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = healedSigStore(spark, path)
     if (!fs.exists(tsPath)) return
     val ts = spark.read.parquet(tsPath.toString).toDF("id")
       .distinct().localCheckpoint()
     if (ts.head(1).nonEmpty) {
       val live = new Path(s"$path/sigs")
-      val tmp = new Path(s"$path/.sigs_purge_tmp")
-      val old = new Path(s"$path/.sigs_purge_old")
-      fs.delete(tmp, true)
-      fs.delete(old, true)
-      val sigs = spark.read.parquet(live.toString)
-      sigs.join(ts.toDF(sigs.columns.head), Seq(sigs.columns.head), "left_anti")
-        .write.parquet(tmp.toString)
-      if (!fs.rename(live, old))
-        throw new java.io.IOException(s"purgeSignatureStore: cannot move $live aside")
-      if (!fs.rename(tmp, live)) {
-        fs.rename(old, live)
-        throw new java.io.IOException(s"purgeSignatureStore: cannot swap $tmp in")
+      Swap.replace(fs, live) { tmp =>
+        val sigs = spark.read.parquet(live.toString)
+        sigs.join(ts.toDF(sigs.columns.head), Seq(sigs.columns.head), "left_anti")
+          .write.parquet(tmp.toString)
       }
-      fs.delete(old, true)
     }
     AnnIndex.purgeIndex(spark, s"$path/bands", "id", partCol = "sb")
   }
@@ -1314,6 +1272,7 @@ object Dedup {
   def dedupAgainstSignatureStore(batchSigs: DataFrame, idCol: String,
       sigCol: String, path: String, maxHamming: Int = 3): DataFrame = {
     val spark = batchSigs.sparkSession
+    healedSigStore(spark, path)
     val (bits, bands, sigBuckets) = signatureStoreLayout(spark, path)
     require(maxHamming < bands,
       s"pigeonhole needs maxHamming ($maxHamming) < bands ($bands)")
@@ -1423,6 +1382,7 @@ object Dedup {
   def hammingPairsFromSignatureStore(
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxHamming: Int = 3): DataFrame = {
+    healedSigStore(spark, path)
     val (_, bands, _) = signatureStoreLayout(spark, path)
     require(maxHamming < bands,
       s"pigeonhole needs maxHamming ($maxHamming) < bands ($bands)")

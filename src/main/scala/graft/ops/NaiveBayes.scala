@@ -285,13 +285,13 @@ object NaiveBayes {
         wordFeatures): Unit = {
     require(batchId.matches("[A-Za-z0-9_-]+"),
       s"batchId '$batchId' must be a plain partition token")
-    val root = healedRoot(docs.sparkSession, path)
+    val root = CountLsm.healedRoot(docs.sparkSession, path)
     // idempotent-retry guard across compaction: a bid that was already
     // FOLDED into __compacted must not land again — its counts are in
     // the compacted partition, and a fresh bid= partition would
     // double-count the batch at read (the q184 streaming-restart +
     // interleaved-compaction window)
-    if (foldedBids(docs.sparkSession, root).contains(batchId)) return
+    if (CountLsm.foldedBids(docs.sparkSession, root).contains(batchId)) return
     val (lab, tok, pin) = countRelations(docs, textCol, labelCol, featuresOf)
     try {
       val mode = org.apache.spark.sql.SaveMode.Overwrite
@@ -318,10 +318,10 @@ object NaiveBayes {
         wordFeatures): Unit = {
     require(batchId.matches("[A-Za-z0-9_-]+"),
       s"batchId '$batchId' must be a plain partition token")
-    val root = healedRoot(docs.sparkSession, path)
+    val root = CountLsm.healedRoot(docs.sparkSession, path)
     // same folded-bid retry guard as [[writeCountBatch]]: a compacted
     // tombstone batch re-deleted would subtract the docs twice
-    if (foldedBids(docs.sparkSession, root).contains(batchId)) return
+    if (CountLsm.foldedBids(docs.sparkSession, root).contains(batchId)) return
     val (lab, tok, pin) = countRelations(docs, textCol, labelCol, featuresOf)
     try {
       val mode = org.apache.spark.sql.SaveMode.Overwrite
@@ -340,12 +340,12 @@ object NaiveBayes {
     * see [[writeCountBatch]]).
     */
   def readCountModel(spark: SparkSession, path: String): Model = {
-    val root = healedRoot(spark, path)
+    val root = CountLsm.healedRoot(spark, path)
     // admitted = committed (lab/ landed) minus already-FOLDED bids: a
     // bid= partition re-appended after its counts were compacted (the
     // belt-and-braces side of the [[writeCountBatch]] guard) reads as
     // the compacted copy only, never both
-    val folded = foldedBids(spark, root)
+    val folded = CountLsm.foldedBids(spark, root)
     val lab0 = CountLsm.dropFolded(
       CountLsm.readDeltas(spark, root, "lab"), folded)
     val committed = lab0.select(col("bid")).distinct()
@@ -389,9 +389,7 @@ object NaiveBayes {
     * partition — the count store's OPTIMIZE: serve-time reads stop
     * growing with ingest cadence, and the summed counts are the same
     * numbers the pre-compaction read produced. Both relations live
-    * under ONE `counts/` root, so the swap is a single rename pair
-    * (live→old, tmp→live) and the one crash window between them is
-    * healed by [[healedRoot]] on the next access.
+    * under ONE `counts/` root, swapped as one ([[CountLsm.compactSwap]]).
     *
     * Folded delta partitions are RETIRED for snapshot reproducibility
     * ([[CountLsm.writeSnapshot]]'s contract), not destroyed: the
@@ -399,8 +397,8 @@ object NaiveBayes {
     * .vacuumRetired]] once no live snapshot pins the batch.
     */
   def compactCountModel(spark: SparkSession, path: String): Unit = {
-    val root = healedRoot(spark, path)
-    val priorFolded = foldedBids(spark, root)
+    val root = CountLsm.healedRoot(spark, path)
+    val priorFolded = CountLsm.foldedBids(spark, root)
     val lab0 = CountLsm.dropFolded(
       CountLsm.readDeltas(spark, root, "lab"), priorFolded)
     val committed = lab0.select(col("bid")).distinct()
@@ -421,15 +419,4 @@ object NaiveBayes {
       lab.coalesce(1).write.parquet(s"$tmp/lab/bid=__compacted")
     }
   }
-
-  /** The count store's `counts/` root, healing the one compaction
-    * crash window: if `counts/` is missing but the renamed-aside
-    * `.counts_old` survives (a crash between compaction's two
-    * renames), restore it — no committed batch is ever lost.
-    */
-  private def healedRoot(spark: SparkSession, path: String): String =
-    CountLsm.healedRoot(spark, path)
-
-  private def foldedBids(spark: SparkSession, root: String): Set[String] =
-    CountLsm.foldedBids(spark, root)
 }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.io.Swap
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -153,11 +155,22 @@ object Retrieval {
   def layoutOf(spark: org.apache.spark.sql.SparkSession,
       path: String): Int =
     layoutCache.computeIfAbsent(path, _ => {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_layout")
+      val p = new Path(s"$path/_layout")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) spark.read.parquet(p.toString).head().getInt(0)
       else 0
     }).intValue()
+
+  /** `path`'s filesystem, after healing every relation swap (and, when
+    * bucketed, every postings-bucket swap) a crash cut short
+    * ([[graft.io.Swap]]) — the first step of every index entry point.
+    */
+  private def healed(spark: org.apache.spark.sql.SparkSession,
+      path: String): FileSystem = {
+    val fs = Swap.healed(spark, path)
+    if (layoutOf(spark, path) > 0) Swap.healAll(fs, new Path(s"$path/postings"))
+    fs
+  }
 
   /** The BM25 index AT REST — the retrieval counterpart of
     * [[Dedup.writeStoredIndex]]'s shingle store: three relations under
@@ -233,9 +246,8 @@ object Retrieval {
   def appendToBm25Index(docs: DataFrame, idCol: String, textCol: String,
       path: String, termBucketsIfNew: Int = 0): Unit = {
     val spark = docs.sparkSession
-    val lensPath = new org.apache.hadoop.fs.Path(s"$path/lens")
-    val fs = lensPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(lensPath)) {
+    val lensPath = new Path(s"$path/lens")
+    if (!healed(spark, path).exists(lensPath)) {
       writeBm25Index(docs, idCol, textCol, path, termBucketsIfNew)
       return
     }
@@ -294,7 +306,7 @@ object Retrieval {
     */
   private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
+    val p = new Path(s"$path/tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
   }
@@ -328,9 +340,8 @@ object Retrieval {
   def deleteFromBm25Index(ids: DataFrame, idCol: String,
       path: String): Unit = {
     val spark = ids.sparkSession
-    val lensPath = new org.apache.hadoop.fs.Path(s"$path/lens")
-    val fs = lensPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(lensPath),
+    val lensPath = new Path(s"$path/lens")
+    require(healed(spark, path).exists(lensPath),
       s"deleteFromBm25Index: no BM25 index at $path")
     val indexed = spark.read.parquet(lensPath.toString)
       .join(ids.select(col(idCol)).distinct(), Seq(idCol), "leftsemi")
@@ -357,11 +368,12 @@ object Retrieval {
     *    file (the threshold-triggered per-bucket pass — steady-state
     *    cost scales with ingest-hot buckets, never index size);
     *  - `lens/` and the flat-postings layout: whole-relation rewrite
-    *    behind a rename-aside swap when fragmented past the threshold
-    *    (no partition column to prune by — these compact as units);
+    *    when fragmented past the threshold (no partition column to
+    *    prune by — these compact as units);
     *  - `stats/`: the append-only delta rows fold back to ONE row
-    *    (sum is the merge), rename-aside swapped, so serve-time stats
-    *    reads stop growing with ingest cadence.
+    *    (sum is the merge), so serve-time stats reads stop growing with
+    *    ingest cadence.
+    * Every rewrite is a [[graft.io.Swap]].
     * Layout-only by construction: serving reads relations, not files —
     * compacted ≡ fragmented exactly (`RetrievalSpec` pins probe
     * equality and the one-file-per-bucket postcondition; the judged
@@ -371,35 +383,15 @@ object Retrieval {
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String, maxFilesPerBucket: Int = 1): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = healed(spark, path)
     def partFiles(dir: Path) = fs.listStatus(dir)
       .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-    // rename-aside swap (the compactStoredDfs discipline): never delete
-    // the only copy — write tmp, live → old, tmp → live, drop old.
-    def swapIn(rel: String)(writeTmp: Path => Unit): Unit = {
-      val live = new Path(s"$path/$rel")
-      val tmp = new Path(s"$path/.${rel}_compact_tmp")
-      val old = new Path(s"$path/.${rel}_compact_old")
-      fs.delete(tmp, true)
-      fs.delete(old, true)
-      writeTmp(tmp)
-      if (!fs.rename(live, old))
-        throw new java.io.IOException(s"compactBm25Index: cannot move $live aside")
-      if (!fs.rename(tmp, live)) {
-        fs.rename(old, live)
-        throw new java.io.IOException(s"compactBm25Index: cannot swap $tmp in")
-      }
-      fs.delete(old, true)
-      ()
-    }
     // whole-relation rewrite. The rewritten file count is sized from
     // the relation's BYTES (⌈size/128 MiB⌉), not its fragment count —
     // many tiny appended files fold to one, a genuinely large relation
     // stays distributed.
     def rewrite(rel: String, plan: DataFrame => DataFrame): Unit =
-      swapIn(rel) { tmp =>
+      Swap.replace(fs, new Path(s"$path/$rel")) { tmp =>
         val bytes = partFiles(new Path(s"$path/$rel")).map(_.getLen).sum
         val nFiles = math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20)).toInt
         plan(spark.read.parquet(s"$path/$rel")).coalesce(nFiles)
@@ -408,7 +400,7 @@ object Retrieval {
     // tb-partitioned rewrite preserving the frozen bucket layout
     // (writePostings' repartition(tb) bounded-writers shape).
     def rewriteBucketed(rel: String, plan: DataFrame => DataFrame): Unit =
-      swapIn(rel) { tmp =>
+      Swap.replace(fs, new Path(s"$path/$rel")) { tmp =>
         plan(spark.read.parquet(s"$path/$rel"))
           .repartition(col("tb"))
           .write.partitionBy("tb").parquet(tmp.toString)
@@ -465,6 +457,7 @@ object Retrieval {
       idCol: String, query: Seq[String], k: Int = 20,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val terms = query.distinct
+    healed(spark, path)
     val buckets = layoutOf(spark, path)
     val postings = spark.read.parquet(s"$path/postings")
     val pruned =
@@ -527,6 +520,7 @@ object Retrieval {
     val qt = queries.flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
     val qterms = qt.toDF("query_id", "term")
     val terms = qt.map(_._2).distinct
+    healed(spark, path)
     val buckets = layoutOf(spark, path)
     val postings = spark.read.parquet(s"$path/postings")
     val pruned =

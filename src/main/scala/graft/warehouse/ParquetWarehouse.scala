@@ -1,7 +1,7 @@
 package graft.warehouse
 
-import graft.io.LocalFs
-import graft.queries.MicroBatchLoop.rmTree
+import graft.io.{LocalFs, Swap}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -15,11 +15,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * and only affected partitions rewrite ([[BucketedWarehouse]]).
   *
   *  - '''Swap.''' A Spark plan cannot overwrite a path it reads, so a
-  *    merge writes `.<t>_tmp`, renames the live dir aside to `.<t>_old`,
-  *    renames `.<t>_tmp` into place and only then deletes `.<t>_old`. A
-  *    failed rename throws. A crash between the two renames leaves only
-  *    `.<t>_old`; the next access renames it back, so a replayed batch
-  *    merges into the full history instead of into nothing.
+  *    merge replaces its table through [[graft.io.Swap]], and every
+  *    access heals the table first: a replayed batch merges into the
+  *    full history, never into nothing.
   *  - '''File sizing.''' A merge rewrites the whole table, so it writes
   *    ⌈(target on-disk bytes + batch input bytes) / split⌉ files (split =
   *    `spark.sql.files.maxPartitionBytes`), at least 1: the file count
@@ -40,56 +38,49 @@ final class ParquetWarehouse(spark: SparkSession, root: String) {
 
   def path(table: String): String = s"$root/$table"
 
-  private def aside(table: String, suffix: String): java.io.File =
-    new java.io.File(root, s".${table}_$suffix")
+  private val fs: FileSystem = Swap.fs(spark, root)
 
-  /** Finish or undo a swap a crash interrupted: `.<t>_old` alone is the
-    * live table; next to a swapped-in table it is garbage.
-    */
-  private def heal(table: String): Unit = {
-    val old = aside(table, "old")
-    if (old.exists()) {
-      val dest = new java.io.File(path(table))
-      if (dest.exists()) rmTree(old) else rename(old, dest)
-    }
+  /** `table`'s live path, after healing a swap a crash cut short. */
+  private def healed(table: String): Path = {
+    val live = new Path(path(table))
+    Swap.heal(fs, live)
+    live
   }
 
-  def exists(table: String): Boolean = {
-    heal(table)
-    new java.io.File(path(table)).exists()
-  }
+  def exists(table: String): Boolean = fs.exists(healed(table))
 
   /** `table` under `spark`'s session (a merge reads its target under the
     * stage's session, so the whole merge plan runs under one conf).
     */
   private def readIn(s: SparkSession, table: String): DataFrame = {
-    heal(table)
-    val p = path(table)
-    Option(schemas.get(p)).fold(s.read)(s.read.schema(_)).parquet(p)
+    val p = healed(table).toString
+    Option(schemas.get(path(table))).fold(s.read)(s.read.schema(_)).parquet(p)
   }
 
   def read(table: String): DataFrame = readIn(spark, table)
 
-  /** Overwrite `table` with `df` via write-aside + swap (class doc).
+  /** Overwrite `table` with `df` through [[graft.io.Swap]].
     * `inputBytes` is the bytes `df` adds to the table's current on-disk
     * size; together they size the file count.
     */
   def overwrite(table: String, df: DataFrame, inputBytes: Long = 0L): Unit = {
-    val dest = new java.io.File(path(table))
-    val tmp = aside(table, "tmp")
-    val old = aside(table, "old")
-    heal(table)
+    val live = healed(table)
     val split = math.max(1L, org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m")))
-    val bytes = dataBytes(dest) + inputBytes
+    val bytes = dataBytes(live) + inputBytes
     val files = math.max(1L, (bytes + split - 1) / split)
-    df.coalesce(files.toInt)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (dest.exists()) rename(dest, old)
-    rename(tmp, dest)
+    Swap.replace(fs, live) { tmp =>
+      df.coalesce(files.toInt).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    }
     schemas.put(path(table), df.schema)
-    rmTree(old)
   }
+
+  /** Bytes of the data files in table dir `dir`; 0 when it is absent. */
+  private def dataBytes(dir: Path): Long =
+    if (!fs.exists(dir)) 0L
+    else fs.listStatus(dir).filterNot { f =>
+      f.getPath.getName.startsWith(".") || f.getPath.getName.startsWith("_")
+    }.map(_.getLen).sum
 
   /** MERGE `stage` into `table` on `keys` (M1/M3-M5 semantics);
     * `stageBytes` sizes the files ([[overwrite]]).
@@ -116,13 +107,4 @@ object ParquetWarehouse {
 
   /** Table path → the schema it was last written with (class doc). */
   private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  private def rename(from: java.io.File, to: java.io.File): Unit =
-    if (!from.renameTo(to)) throw new java.io.IOException(s"cannot rename $from to $to")
-
-  /** Bytes of the data files in table dir `dir`; 0 when it is absent. */
-  private def dataBytes(dir: java.io.File): Long =
-    Option(dir.listFiles).fold(0L)(_.filterNot { f =>
-      f.getName.startsWith(".") || f.getName.startsWith("_")
-    }.map(_.length).sum)
 }

@@ -39,7 +39,11 @@ class LocalFsSpec extends SparkSpec {
   }
 
   /** The commands of the processes `f` starts, from JFR's
-    * `jdk.ProcessStart` events.
+    * `jdk.ProcessStart` events. An `rm -rf` started on a
+    * `java.lang.ref.Cleaner` thread is not counted: Spark's
+    * `ArtifactManager` deletes a garbage-collected session's artifact
+    * dir from one (a finished stream's session clone), whenever a GC
+    * happens to collect that session — not a write path.
     */
   private def spawns(f: => Unit): Seq[String] = {
     val rec = new Recording()
@@ -51,6 +55,8 @@ class LocalFsSpec extends SparkSpec {
       rec.dump(file)
       RecordingFile.readAllEvents(file).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .filterNot(e => e.getString("command").startsWith("rm -rf ") &&
+          Option(e.getThread).exists(_.getJavaName.startsWith("Cleaner-")))
         .map(_.getString("command"))
     } finally { rec.close(); Files.delete(file) }
   }
