@@ -1181,7 +1181,8 @@ object Dedup {
 
   /** Heal every swap under the signature store and its `bands/`
     * buckets ([[graft.io.Swap]]) — the first step of every store entry
-    * point; returns the filesystem.
+    * point that does not hand `bands/` to an [[AnnIndex]] entry point
+    * (which heals it); returns the filesystem.
     */
   private def healedSigStore(spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.hadoop.fs.FileSystem = {
@@ -1230,7 +1231,7 @@ object Dedup {
     */
   def deleteFromSignatureStore(ids: DataFrame, idCol: String,
       path: String): Unit = {
-    healedSigStore(ids.sparkSession, path)
+    Swap.healed(ids.sparkSession, path) // bands/ is healed by AnnIndex
     AnnIndex.deleteFromIndex(ids.select(col(idCol).as("id")), "id",
       s"$path/bands")
   }
@@ -1245,16 +1246,17 @@ object Dedup {
   def purgeSignatureStore(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val tsPath = new Path(s"$path/bands/_tombstones")
-    val fs = healedSigStore(spark, path)
-    if (!fs.exists(tsPath)) return
-    val ts = spark.read.parquet(tsPath.toString).toDF("id")
-      .distinct().localCheckpoint()
-    if (ts.head(1).nonEmpty) {
-      val live = new Path(s"$path/sigs")
-      Swap.replace(fs, live) { tmp =>
-        val sigs = spark.read.parquet(live.toString)
-        sigs.join(ts.toDF(sigs.columns.head), Seq(sigs.columns.head), "left_anti")
-          .write.parquet(tmp.toString)
+    val fs = Swap.healed(spark, path) // bands/ is healed by AnnIndex
+    if (fs.exists(tsPath)) {
+      val ts = spark.read.parquet(tsPath.toString).toDF("id")
+        .distinct().localCheckpoint()
+      if (ts.head(1).nonEmpty) {
+        val live = new Path(s"$path/sigs")
+        Swap.replace(fs, live) { tmp =>
+          val sigs = spark.read.parquet(live.toString)
+          sigs.join(ts.toDF(sigs.columns.head), Seq(sigs.columns.head), "left_anti")
+            .write.parquet(tmp.toString)
+        }
       }
     }
     AnnIndex.purgeIndex(spark, s"$path/bands", "id", partCol = "sb")

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.functions.GraftFunctions
 import graft.io.Swap
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -43,10 +43,16 @@ object IvfIndex {
   /** Heal the index root's own swap ([[rebuild]]) and its cell swaps
     * ([[purge]]) — the first step of every entry point ([[graft.io.Swap]]).
     */
-  private def heal(spark: SparkSession, path: String): Unit = {
+  private def heal(spark: SparkSession, path: String): Unit =
+    Swap.healAll(healRoot(spark, path), new Path(path))
+
+  /** Heal only the root's own swap, where an [[AnnIndex]] entry point
+    * that heals the cells follows; returns the filesystem.
+    */
+  private def healRoot(spark: SparkSession, path: String): FileSystem = {
     val fs = Swap.fs(spark, path)
     Swap.heal(fs, new Path(path))
-    Swap.healAll(fs, new Path(path))
+    fs
   }
 
   /** The coarse quantizer's centroid table for a build:
@@ -649,7 +655,7 @@ object IvfIndex {
     * exactly as it does not change on [[append]]).
     */
   def delete(ids: DataFrame, idCol: String, path: String): Unit = {
-    heal(ids.sparkSession, path)
+    healRoot(ids.sparkSession, path)
     AnnIndex.deleteFromIndex(ids, idCol, path)
   }
 
@@ -659,7 +665,7 @@ object IvfIndex {
     * frozen, rows are gone).
     */
   def purge(spark: SparkSession, path: String, idCol: String): Unit = {
-    heal(spark, path)
+    healRoot(spark, path)
     AnnIndex.purgeIndex(spark, path, idCol, partCol = "cell")
   }
 

@@ -21,7 +21,11 @@ import org.scalatest.BeforeAndAfterAll
   * protocol is [[graft.io.Swap]]'s): the relation before the swap moved
   * to `.<name>_old`, and its replacement — copied from a run of the same
   * maintenance that was not cut — at `.<name>_tmp` (first rename) or at
-  * the live path (second rename).
+  * the live path (second rename). A job that swaps many relations in
+  * from one shared tmp dir is cut in the middle of its run: the
+  * relations before the cut one already swapped in, the cut one's
+  * replacement under the shared tmp (first rename), and the ones after
+  * it still waiting there.
   */
 class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -34,15 +38,19 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
   /** One swap site. Each store lives at `<container>/store`:
     *  - `build` writes the state the maintenance starts from;
     *  - `maintain` is the call whose swap is cut;
-    *  - `rel` names the swapped relation relative to the container,
-    *    given the store before and after an uncut `maintain`;
+    *  - `rels` names the swapped relations relative to the container,
+    *    in swap order, given the store before and after an uncut
+    *    `maintain`;
     *  - `read` is the store's read, as sorted rows;
     *  - `next` is its next append (or, for the warehouse, the replay of
-    *    the cut merge).
+    *    the cut merge);
+    *  - `sharedTmp` names the dir, beside the relations, that a job
+    *    swapping many of them writes all replacements under.
     */
   private case class Site(name: String, build: String => Unit,
-      maintain: String => Unit, rel: (File, File) => String,
-      read: String => Seq[String], next: String => Unit)
+      maintain: String => Unit, rels: (File, File) => Seq[String],
+      read: String => Seq[String], next: String => Unit,
+      sharedTmp: Option[String] = None)
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
@@ -63,24 +71,35 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
     c
   }
 
-  /** The first child dir of a store whose file names differ after `maintain`. */
-  private def changedDir(before: File, after: File): String = {
+  /** The child dirs of a store whose file names differ after `maintain`, sorted. */
+  private def changedDirs(before: File, after: File): Seq[String] = {
     def files(d: File) = Option(d.list).fold(Set.empty[String])(_.toSet)
     before.listFiles.filter(d => d.isDirectory && !d.getName.startsWith("_"))
-      .map(_.getName).sorted
-      .find(n => files(new File(before, n)) != files(new File(after, n)))
-      .map(n => s"store/$n").getOrElse(fail(s"no dir under $before changed"))
+      .map(_.getName).sorted.toSeq
+      .filter(n => files(new File(before, n)) != files(new File(after, n)))
+      .map(n => s"store/$n")
   }
 
   private def asides(dir: File): Seq[String] =
     Files.walk(dir.toPath).iterator().asScala.map(_.getFileName.toString)
       .filter(_.matches("""\..+_(tmp|old)""")).toSeq
 
-  private def stage(c: File, post: File, rel: String, afterRename: Int): Unit = {
-    val live = new File(c, rel)
+  /** Stage the cut of the swap of the middle relation of `rels`. */
+  private def stage(c: File, post: File, rels: Seq[String], sharedTmp: Option[String],
+      afterRename: Int): Unit = {
+    val k = rels.size / 2
+    val live = new File(c, rels(k))
     def aside(kind: String) = new File(live.getParentFile, s".${live.getName}_$kind")
+    def pending(rel: String) = sharedTmp.fold(aside("tmp"))(t =>
+      new File(new File(live.getParentFile, t), new File(rel).getName))
+    sharedTmp.foreach(t => new File(live.getParentFile, t).mkdirs())
+    rels.take(k).foreach { rel =>
+      rmTree(new File(c, rel))
+      copyTree(new File(post, rel), new File(c, rel))
+    }
     Files.move(live.toPath, aside("old").toPath)
-    copyTree(new File(post, rel), if (afterRename == 1) aside("tmp") else live)
+    copyTree(new File(post, rels(k)), if (afterRename == 1) pending(rels(k)) else live)
+    rels.drop(k + 1).foreach(rel => copyTree(new File(post, rel), pending(rel)))
   }
 
   private def matrix(site: Site): Unit = {
@@ -96,7 +115,7 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
       site.maintain(store(c))
       c
     }
-    lazy val rel = site.rel(new File(store(base)), new File(store(post)))
+    lazy val rels = site.rels(new File(store(base)), new File(store(post)))
     lazy val before = site.read(store(base))
     lazy val after = site.read(store(post))
     lazy val afterNext = {
@@ -105,9 +124,11 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
     }
     for (cut <- Seq(1, 2))
       test(s"${site.name}: a swap cut after rename $cut heals on the next read and the next call") {
+        // a shared-tmp job is cut with relations on both sides of the cut one
+        assert(if (site.sharedTmp.isEmpty) rels.size == 1 else rels.size >= 3, rels)
         val (r, n) = (copy(base), copy(base))
         try {
-          Seq(r, n).foreach(stage(_, post, rel, cut))
+          Seq(r, n).foreach(stage(_, post, rels, site.sharedTmp, cut))
           assert(site.read(store(r)) == (if (cut == 1) before else after))
           assert(asides(r).isEmpty)
           site.next(store(n))
@@ -124,7 +145,7 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
   matrix(Site("ParquetWarehouse.overwrite",
     build = p => new ParquetWarehouse(spark, p).mergeInto("t", kv("a" -> 1, "b" -> 1), Seq("k")),
     maintain = p => new ParquetWarehouse(spark, p).mergeInto("t", kv("b" -> 2, "c" -> 2), Seq("k")),
-    rel = (_, _) => "store/t",
+    rels = (_, _) => Seq("store/t"),
     read = p => rows(new ParquetWarehouse(spark, p).read("t")),
     next = p => new ParquetWarehouse(spark, p).mergeInto("t", kv("b" -> 2, "c" -> 2), Seq("k"))))
 
@@ -142,7 +163,7 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
       NaiveBayes.writeCountBatch(batch(3, 4), "doc_id", "text", "lang", p, "b1")
     },
     maintain = NaiveBayes.compactCountModel(spark, _),
-    rel = (_, _) => "store/counts",
+    rels = (_, _) => Seq("store/counts"),
     read = p => {
       val m = NaiveBayes.readCountModel(spark, p)
       rows(m.priors) ++ rows(m.lik)
@@ -155,7 +176,7 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
       LanguageModel.writeCountBatch(batch(3, 4), "doc_id", "text", p, "b1")
     },
     maintain = LanguageModel.compactCountModel(spark, _),
-    rel = (_, _) => "store/counts",
+    rels = (_, _) => Seq("store/counts"),
     read = p => rows(LanguageModel.scoreFromCounts(spark, p, texts, "doc_id", "text")),
     next = LanguageModel.writeCountBatch(batch(5, 6), "doc_id", "text", _, "b2")))
 
@@ -167,7 +188,7 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
       Retrieval.appendToBm25Index(batch(3, 4), "doc_id", "text", p)
     },
     maintain = Retrieval.compactBm25Index(spark, _),
-    rel = (_, _) => "store/lens",
+    rels = (_, _) => Seq("store/lens"),
     read = p => rows(Retrieval.bm25BatchFromIndex(spark, p, "doc_id",
       Seq(1L -> Seq("a", "b"), 2L -> Seq("c", "e", "f")))),
     next = Retrieval.appendToBm25Index(batch(5, 6), "doc_id", "text", _)))
@@ -188,7 +209,7 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
       Dedup.appendToStoredIndex(shingles(3, 4), batch(3, 4).select("doc_id"), "doc_id", p)
     },
     maintain = Dedup.compactStoredDfs(spark, _),
-    rel = (_, _) => "store/dfs",
+    rels = (_, _) => Seq("store/dfs"),
     read = readShingles,
     next = appendShingles))
 
@@ -198,7 +219,7 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
       Dedup.deleteFromStoredIndex(Seq(2L).toDF("doc_id"), "doc_id", p)
     },
     maintain = Dedup.purgeStoredIndex(spark, "doc_id", _),
-    rel = (_, _) => "store/postings",
+    rels = (_, _) => Seq("store/postings"),
     read = readShingles,
     next = appendShingles))
 
@@ -211,7 +232,7 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
       Dedup.deleteFromSignatureStore(Seq(3L, 4L).toDF("id"), "id", p)
     },
     maintain = Dedup.purgeSignatureStore(spark, _),
-    rel = (_, _) => "store/sigs",
+    rels = (_, _) => Seq("store/sigs"),
     read = p => rows(Dedup.hammingPairsFromSignatureStore(spark, p)),
     next = Dedup.appendToSignatureStore(sigs(13 to 16), "id", "sig", _)))
 
@@ -230,28 +251,30 @@ class CrashMatrixSpec extends SparkSpec with BeforeAndAfterAll {
       IvfIndex.append(spark, vecs(13 to 24), "id", "v", p)
     },
     maintain = IvfIndex.rebuild(spark, _, "id", numCentroids = 3),
-    rel = (_, _) => "store",
+    rels = (_, _) => Seq("store"),
     read = p => rows(IvfIndex.probe(spark, p, "id", Array(1.0, 0.5, -1.0, 2.0),
       k = 100, nprobe = 3)),
     next = IvfIndex.append(spark, vecs(25 to 30), "id", "v", _)))
 
   matrix(Site("AnnIndex.purgeIndex",
     build = p => {
-      AnnIndex.write(vecs(1 to 24), "id", "v", p, numPlanes = 2)
-      AnnIndex.deleteFromIndex(Seq(3L, 4L, 5L).toDF("id"), "id", p)
+      AnnIndex.write(vecs(1 to 24), "id", "v", p, numPlanes = 3)
+      AnnIndex.deleteFromIndex((1L to 24L by 2).toDF("id"), "id", p)
     },
     maintain = AnnIndex.purgeIndex(spark, _, "id"),
-    rel = changedDir,
+    rels = changedDirs,
     read = allPairs,
-    next = AnnIndex.append(vecs(25 to 30), "id", "v", _, numPlanes = 2)))
+    next = AnnIndex.append(vecs(25 to 30), "id", "v", _, numPlanes = 3),
+    sharedTmp = Some(".purge_tmp")))
 
   matrix(Site("AnnIndex.compactBuckets",
     build = p => {
-      AnnIndex.write(vecs(1 to 12), "id", "v", p, numPlanes = 2)
-      AnnIndex.append(vecs(13 to 24), "id", "v", p, numPlanes = 2)
+      AnnIndex.write(vecs(1 to 12), "id", "v", p, numPlanes = 3)
+      AnnIndex.append(vecs(13 to 24), "id", "v", p, numPlanes = 3)
     },
     maintain = AnnIndex.compactBuckets(spark, _, maxFilesPerBucket = 1),
-    rel = changedDir,
+    rels = changedDirs,
     read = allPairs,
-    next = AnnIndex.append(vecs(25 to 30), "id", "v", _, numPlanes = 2)))
+    next = AnnIndex.append(vecs(25 to 30), "id", "v", _, numPlanes = 3),
+    sharedTmp = Some(".compact_tmp")))
 }

@@ -1,6 +1,7 @@
 package graft.io
 
 import java.io.{File, RandomAccessFile}
+import java.lang.ref.Reference
 import java.net.URI
 import java.nio.file.{Files, Paths}
 import java.util.EnumSet
@@ -17,7 +18,7 @@ import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileContext, FileSta
   LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** [[LocalFs]]: no process spawns on graft's write paths, and every
   * check of the stock local filesystem kept — permission bits, `.crc`
@@ -39,11 +40,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   /** The commands of the processes `f` starts, from JFR's
-    * `jdk.ProcessStart` events. An `rm -rf` started on a
-    * `java.lang.ref.Cleaner` thread is not counted: Spark's
-    * `ArtifactManager` deletes a garbage-collected session's artifact
-    * dir from one (a finished stream's session clone), whenever a GC
-    * happens to collect that session — not a write path.
+    * `jdk.ProcessStart` events.
     */
   private def spawns(f: => Unit): Seq[String] = {
     val rec = new Recording()
@@ -55,10 +52,20 @@ class LocalFsSpec extends SparkSpec {
       rec.dump(file)
       RecordingFile.readAllEvents(file).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart")
-        .filterNot(e => e.getString("command").startsWith("rm -rf ") &&
-          Option(e.getThread).exists(_.getJavaName.startsWith("Cleaner-")))
         .map(_.getString("command"))
     } finally { rec.close(); Files.delete(file) }
+  }
+
+  /** Collect every unreachable session and wait until the cleanups
+    * Spark's `ArtifactManager` registers for them have run: each forks
+    * an `rm -rf` of the session's artifact dir on a `Cleaner` thread
+    * whenever a GC collects the session (earlier suites leave finished
+    * streams' session clones behind), which must not land inside a
+    * recording.
+    */
+  private def settleSessionCleanups(): Unit = {
+    val quiet = Iterator.range(0, 20).exists(_ => spawns { System.gc(); Thread.sleep(200) }.isEmpty)
+    assert(quiet, "session cleanups still forking after 20 collections")
   }
 
   /** Runs `f` with the stock local filesystem cached and configured,
@@ -75,27 +82,35 @@ class LocalFsSpec extends SparkSpec {
     * stream into `foreachBatch` (its offset and commit logs are written
     * by `FileContext` renames).
     */
-  private def writeSteps(dir: File): Unit = {
+  private def writeSteps(dir: File): StreamingQuery = {
     val df = spark.range(40).select(col("id"), (col("id") % 4).as("p"))
     df.write.mode("append").partitionBy("p").parquet(s"$dir/table")
     df.repartition(2).write.parquet(s"$dir/in")
     val sink: (DataFrame, Long) => Unit =
       (batch, _) => batch.write.mode("append").parquet(s"$dir/out")
-    spark.readStream.schema(df.schema).option("maxFilesPerTrigger", "1")
+    val query = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", "1")
       .parquet(s"$dir/in")
       .writeStream.option("checkpointLocation", s"$dir/ck")
       .trigger(Trigger.AvailableNow())
       .foreachBatch(sink)
-      .start().awaitTermination()
+      .start()
+    query.awaitTermination()
     assert(new File(dir, "ck/commits").list.filterNot(_.startsWith(".")).sorted.toSeq ===
       Seq("0", "1"))
     assert(spark.read.parquet(s"$dir/out").count() === 40)
+    query
   }
 
   test("graft's write paths spawn no process; on the stock filesystem they do") {
     withDir { dir =>
       assert(FileSystem.get(local, conf).isInstanceOf[NioLocalFileSystem])
-      assert(spawns(writeSteps(new File(dir, "nio"))) === Nil)
+      settleSessionCleanups()
+      var query: StreamingQuery = null
+      // the query holds the stream's session clone: reachable, it is
+      // not collected (and its artifact dir not removed) mid-recording
+      val nio = spawns { query = writeSteps(new File(dir, "nio")) }
+      Reference.reachabilityFence(query)
+      assert(nio === Nil)
       val stock = onStockFs(spawns(writeSteps(new File(dir, "stock"))))
       assert(stock.count(c => c.startsWith("chmod") || c.startsWith("readlink")) > 0, stock)
       assert(FileSystem.get(local, conf).isInstanceOf[NioLocalFileSystem])
